@@ -22,42 +22,54 @@ Faithful semantics (verified against the source):
 Spark-first execution:
 
 - The mapper's per-JVM sequential sweep becomes an Arrow-batched
-  ``mapInPandas`` over each partition (partition ≈ map split).
+  ``mapInPandas`` job per iteration. Each of the ``n_partitions`` map
+  splits is swept as its own trajectory, starting from the iteration's
+  θ, but the splits ride on only ``min(n_partitions,
+  defaultParallelism)`` tasks: every task receives a contiguous group of
+  splits and sweeps them one after another, so an iteration is one wave
+  of Python tasks instead of one task per split.
 - The reference funnels one value PER RECORD to a single reducer
   (constant key "1", ``logisticreg.java:95-97``) — a scalability cliff at
-  100 TB. Here each partition pre-aggregates locally (sum of snapshots,
-  AND of flags, count) and emits ONE row; the driver combines the
-  ~numPartitions tiny rows. Mathematically identical to the reference's
-  reduce, with shuffle volume O(partitions · d) instead of O(rows · d).
+  100 TB. Here each split pre-aggregates locally (sum of snapshots, AND
+  of flags, count) and emits ONE partial row; the driver combines the
+  ``n_partitions`` tiny rows. Mathematically identical to the
+  reference's reduce, with shuffle volume O(splits · d) instead of
+  O(rows · d).
 - θ travels driver → executors inside the kernel closure per iteration
-  (replacing the per-JVM HDFS theta-file read, ``logisticreg.java:67-75``;
-  d=4 doubles — a broadcast per iteration was pure churn at this size).
+  (replacing the per-JVM HDFS theta-file read, ``logisticreg.java:67-75``);
+  at d=4 doubles a broadcast per iteration would be pure churn.
 - The per-record sweep itself runs as a compiled C kernel with the
   identical IEEE op sequence when a C compiler is available
-  (``_NATIVE_SRC`` — guide §4.2), falling back to the bit-identical
-  pure-Python loop otherwise; inputs cross the Arrow boundary as flat
-  float64 columns so the native sweep reads them zero-copy.
+  (``_NATIVE_SRC``), falling back to the bit-identical
+  pure-Python loop otherwise; every partial records which one ran, and
+  ``SGDResult.native`` is true only when every split ran native. Inputs
+  cross the Arrow boundary as flat float64 columns so the native sweep
+  reads them zero-copy.
 
-Determinism: snapshot averaging depends on partition layout and
-in-partition order. ``sgd_fit`` therefore assigns each row a RANGE split
-id by exact integer arithmetic over the ``row_id`` domain, places each
-split on its own partition exactly (hash-salt lookup — see
-``_exact_partition_salts``), and sorts within partitions by ``row_id``,
-so results are bit-reproducible for a given ``n_partitions`` and input
-layout (SURVEY §7.2). ``repartitionByRange`` was NOT enough (r11
-finding): its range boundaries come from reservoir sampling seeded by
-the RDD id, which changes across actions in one session — two identical
-6k-row fits at 8 partitions differed in the third decimal. Assertions
-are tolerance-based regardless; ``row_id`` itself
-(``monotonically_increasing_id`` over the scan) is deterministic for a
-fixed file set and session conf, like the reference's HDFS block
-splits are for a fixed cluster config.
+Determinism: snapshot averaging depends on which rows form a split and
+on their order. ``sgd_fit`` assigns each row a split id by exact integer
+arithmetic over the ``row_id`` domain, so splits are contiguous row_id
+ranges. A group of consecutive splits is placed on one task exactly
+(hash-salt lookup — see ``_exact_partition_salts``) and the task sorts
+by ``row_id``, which keeps each split contiguous and in split order; the
+kernel resets θ wherever the split id changes, including inside an
+Arrow batch. The driver fills each empty split with the zero partial
+and sums the partials in split order, so θ is bit-reproducible for a
+given ``n_partitions`` and input layout and does not depend on the task
+count or the Arrow batch size (SURVEY §7.2). ``repartitionByRange`` is
+not usable for the split assignment: its range boundaries come from
+reservoir sampling seeded by the RDD id, which changes across actions in
+one session. ``row_id`` itself (``monotonically_increasing_id`` over
+the scan) is deterministic for a fixed file set and session conf, like
+the reference's HDFS block splits are for a fixed cluster config.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 from dataclasses import dataclass
+from itertools import groupby
+from operator import itemgetter
 
 import numpy as np
 import pandas as pd
@@ -68,16 +80,18 @@ ALPHA = 0.03  # logisticreg.java:150
 ACCURACY = 0.01  # logisticreg.java:151
 MAX_ITER = 50  # logisticreg.java:147 (the conf "numIter"=2 at :152 is unused)
 
-_PARTIAL_SCHEMA = "all_continue boolean, n long, theta_sum array<double>"
+# one row per non-empty split; a task emits the partials of every split
+# it holds, in split order
+_PARTIAL_SCHEMA = (
+    "split int, all_continue boolean, n long, theta_sum array<double>, "
+    "native boolean"
+)
 
 # --------------------------------------------------------------- native
-# The per-record sweep in C (r18, guide §4.2 "do the heavy lifting in
-# native code inside the UDF"): the trajectory-averaged SGD is
-# inherently SEQUENTIAL per partition (theta mutates at almost every
-# record), so it can never vectorize through numpy — and the r18 probe
-# showed the pure-Python loop dominates each iteration (~0.5 s/iter at
-# sf0.1's 600k rows; flat-column Arrow transfer alone changed nothing:
-# probe_sgd_flat_r18.json). The C body below executes the EXACT
+# The per-record sweep in C. Trajectory-averaged SGD is inherently
+# SEQUENTIAL per split (theta mutates at almost every record), so it
+# cannot vectorize through numpy, and the pure-Python loop dominates an
+# iteration's executor time. The C body below executes the EXACT
 # reference float sequence — h += x[j]*theta[j] (logisticreg.java:77),
 # theta[j] += alpha*(err*x[j]) (:85's parenthesization), per-record
 # snapshot sums — on IEEE doubles. Compiled with -ffp-contract=off so
@@ -162,12 +176,10 @@ def _native_kernel_path() -> str:
         _NATIVE_SO = ""
     return _NATIVE_SO
 
-# Most recent fit's iteration count per link, recorded by sgd_fit.
-# bench.py copies it into its sidecar (r9 verdict #5): the SGD queries'
-# wall time is iterations × per-iteration cost, and the stop rule is
-# data/trajectory-dependent, so a slow bench line needs to be
-# attributable to convergence-path variance vs a real per-iteration
-# regression.
+# Most recent fit's iteration count per link, recorded by sgd_fit. A
+# fit's wall time is iterations × per-iteration cost and the stop rule
+# is data-dependent, so bench reports carry the count to tell a longer
+# convergence path from a slower iteration.
 LAST_FIT_ITERATIONS: dict[str, int] = {}
 
 
@@ -176,43 +188,40 @@ class SGDResult:
     theta: list[float]
     iterations: int
     converged: bool  # stopped via the reference's any-record-within-accuracy rule
-    # how many partitions actually held rows: with scan-derived sparse
+    # how many splits actually held rows: with scan-derived sparse
     # row_ids the domain buckets track scan-block granularity, so this
     # can be < n_partitions (Hadoop's mappers ≤ input splits, kept
     # faithfully) — recorded so the collapse is observable, never silent
     n_splits_effective: int = 0
+    # True only when every non-empty split of every iteration ran the C
+    # sweep; an executor that cannot load the .so shows up here instead
+    # of silently running the (bit-identical, slower) Python loop
+    native: bool = False
 
 
 def _partition_kernel(
     theta_in, alpha: float, accuracy: float, link: str, so_path: str = ""
 ):
-    # theta travels as a PLAIN TUPLE in the closure (r18): every
-    # registered fit has d=4, so the old per-iteration broadcast
-    # created/destroyed a torrent block per iteration to ship 32 bytes
-    # — per-task closure copies of a 4-double tuple are strictly
-    # cheaper at any executor count. A future huge-d caller should
-    # reintroduce a broadcast; the loop cost model changes long before
-    # theta serialization does.
-    #
-    # The kernel expects FLAT float64 columns y, x0..x{d-1} (not one
-    # array<double> column): flat columns arrive as contiguous float64
-    # Arrow buffers that hand zero-copy pointers to the native sweep.
+    """``mapInPandas`` body for one SGD iteration. Input batches carry
+    ``split int, y, x0..x{d-1}`` (flat float64 columns arrive as
+    contiguous Arrow buffers that hand zero-copy pointers to the native
+    sweep), sorted so each split's rows are contiguous. Every split
+    starts from ``theta_in``, including one that begins inside a batch,
+    and emits one ``_PARTIAL_SCHEMA`` row; a task with no rows emits
+    nothing. ``theta_in`` is a plain tuple in the closure: a per-task
+    copy of d doubles is cheaper than a broadcast per iteration."""
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from math import exp as _exp
 
-        theta = [float(t) for t in theta_in]
-        d = len(theta)
+        d = len(theta_in)
         rng_d = range(d)
-        snap_sum = [0.0] * d
-        n = 0
-        all_continue = True
         logistic = link == "logistic"
         lib = None
         if so_path:
-            # native sweep (guide §4.2): same float sequence, compiled
-            # — see _NATIVE_SRC. Any load failure (missing file on a
-            # remote executor, no loader) silently falls back to the
-            # bit-identical Python loop below.
+            # any load failure (missing file on a remote executor, no
+            # loader) falls back to the bit-identical Python loop below
+            # and is reported through the partials' native flag
             try:
                 import ctypes
 
@@ -229,87 +238,105 @@ def _partition_kernel(
                 lib.sweep.restype = None
             except OSError:
                 lib = None
-        if lib is not None:
-            import ctypes
 
-            c_dbl_p = ctypes.POINTER(ctypes.c_double)
-            theta_a = np.asarray(theta, dtype=np.float64)
-            snap_a = np.zeros(d, dtype=np.float64)
-            n_c = ctypes.c_longlong(0)
-            cont_c = ctypes.c_int(1)
-            for pdf in batches:
-                ys = np.ascontiguousarray(
-                    pdf["y"].to_numpy(), dtype=np.float64
-                )
-                cols = [
-                    np.ascontiguousarray(
-                        pdf[f"x{j}"].to_numpy(), dtype=np.float64
+        if lib is not None:
+
+            def sweep_split(segments):
+                theta = np.array(theta_in, dtype=np.float64)
+                snap = np.zeros(d, dtype=np.float64)
+                n = ctypes.c_longlong(0)
+                cont = ctypes.c_int(1)
+                for _, ys, cols in segments:
+                    lib.sweep(
+                        (c_dbl_p * d)(*[c.ctypes.data_as(c_dbl_p) for c in cols]),
+                        ys.ctypes.data_as(c_dbl_p),
+                        len(ys),
+                        d,
+                        alpha,
+                        accuracy,
+                        1 if logistic else 0,
+                        theta.ctypes.data_as(c_dbl_p),
+                        snap.ctypes.data_as(c_dbl_p),
+                        ctypes.byref(n),
+                        ctypes.byref(cont),
                     )
+                return bool(cont.value), n.value, snap.tolist()
+
+        else:
+
+            def sweep_split(segments):
+                # Pure-Python fallback — THE float-order reference: the
+                # dot accumulates sequentially h += x[j]*theta[j]
+                # (logisticreg.java:77 — numpy's `x @ theta` rounds
+                # pairwise and diverges in the last ulp), and the
+                # update scales as alpha * ((y-h) * x[j])
+                # (logisticreg.java:85's parenthesization, not the
+                # hoisted (alpha*(y-h)) * x[j]). math.exp wraps the same
+                # libm exp the native sweep calls.
+                theta = [float(t) for t in theta_in]
+                snap_sum = [0.0] * d
+                n = 0
+                all_continue = True
+                for _, ys, cols in segments:
+                    ys = ys.tolist()
+                    cols = [c.tolist() for c in cols]
+                    for i in range(len(ys)):
+                        y = ys[i]
+                        h = 0.0
+                        for j in rng_d:
+                            h += cols[j][i] * theta[j]  # logisticreg.java:77
+                        if logistic:
+                            # clamp: math.exp overflows past ~709 (np.exp
+                            # → inf); saturate h to 0/1 as inf would
+                            if h < -709.0:
+                                h = 0.0
+                            elif h > 709.0:
+                                h = 1.0
+                            else:
+                                h = 1.0 / (1.0 + _exp(-h))
+                        if abs(h - y) > accuracy:
+                            err = y - h
+                            for j in rng_d:
+                                # logisticreg.java:85
+                                theta[j] += alpha * (err * cols[j][i])
+                        else:
+                            all_continue = False  # this record's flag is "false"
+                        for j in rng_d:
+                            snap_sum[j] += theta[j]  # snapshot, logisticreg.java:87,92
+                    n += len(ys)
+                return all_continue, n, snap_sum
+
+        def segments():
+            """``(split, y, [x_j])`` runs of rows sharing one split id."""
+            for pdf in batches:
+                ids = pdf["split"].to_numpy()
+                if not len(ids):
+                    continue
+                ys = np.ascontiguousarray(pdf["y"].to_numpy(), dtype=np.float64)
+                cols = [
+                    np.ascontiguousarray(pdf[f"x{j}"].to_numpy(), dtype=np.float64)
                     for j in rng_d
                 ]
-                ptrs = (c_dbl_p * d)(
-                    *[c.ctypes.data_as(c_dbl_p) for c in cols]
-                )
-                lib.sweep(
-                    ptrs,
-                    ys.ctypes.data_as(c_dbl_p),
-                    len(ys),
-                    d,
-                    alpha,
-                    accuracy,
-                    1 if logistic else 0,
-                    theta_a.ctypes.data_as(c_dbl_p),
-                    snap_a.ctypes.data_as(c_dbl_p),
-                    ctypes.byref(n_c),
-                    ctypes.byref(cont_c),
-                )
+                cuts = [0, *(np.flatnonzero(ids[1:] != ids[:-1]) + 1), len(ids)]
+                for a, b in zip(cuts[:-1], cuts[1:]):
+                    yield int(ids[a]), ys[a:b], [c[a:b] for c in cols]
+
+        # each split's rows are contiguous, so one group is one whole split
+        partials = [
+            (split, *sweep_split(segs))
+            for split, segs in groupby(segments(), key=itemgetter(0))
+        ]
+        if partials:
+            split, cont, n, theta_sum = zip(*partials)
             yield pd.DataFrame(
                 {
-                    "all_continue": [bool(cont_c.value)],
-                    "n": [n_c.value],
-                    "theta_sum": [snap_a.tolist()],
+                    "split": split,
+                    "all_continue": cont,
+                    "n": n,
+                    "theta_sum": theta_sum,
+                    "native": lib is not None,
                 }
             )
-            return
-        # Pure-Python fallback — THE float-order reference (r10: 2×
-        # over the previous numpy-per-row form), byte-for-byte the
-        # sequence the reference computes: the dot accumulates
-        # sequentially h += x[j]*theta[j] (logisticreg.java:77 —
-        # numpy's `x @ theta` rounds pairwise and diverged in the last
-        # ulp), and the update scales as alpha * ((y-h) * x[j])
-        # (logisticreg.java:85's parenthesization, not the hoisted
-        # (alpha*(y-h)) * x[j]). math.exp beats np.exp on scalars ~10×
-        # and wraps the same libm exp the native sweep calls.
-        for pdf in batches:
-            ys = pdf["y"].tolist()
-            cols = [pdf[f"x{j}"].tolist() for j in rng_d]
-            for i in range(len(ys)):
-                y = ys[i]
-                h = 0.0
-                for j in rng_d:
-                    h += cols[j][i] * theta[j]  # logisticreg.java:77
-                if logistic:
-                    # clamp: math.exp overflows past ~709 (np.exp → inf);
-                    # saturate h to 0/1 the same way inf would
-                    if h < -709.0:
-                        h = 0.0
-                    elif h > 709.0:
-                        h = 1.0
-                    else:
-                        h = 1.0 / (1.0 + _exp(-h))
-                if abs(h - y) > accuracy:
-                    err = y - h
-                    for j in rng_d:
-                        # logisticreg.java:85
-                        theta[j] += alpha * (err * cols[j][i])
-                else:
-                    all_continue = False  # this record's flag is "false"
-                for j in rng_d:
-                    snap_sum[j] += theta[j]  # snapshot, logisticreg.java:87,92
-                n += 1
-        yield pd.DataFrame(
-            {"all_continue": [all_continue], "n": [n], "theta_sum": [snap_sum]}
-        )
 
     return kernel
 
@@ -345,40 +372,19 @@ def _exact_partition_salts(spark, n_part: int) -> list[int]:
     return _SALT_CACHE[key]
 
 
-def sgd_fit(
-    points: DataFrame,
-    link: str = "linear",
-    alpha: float = ALPHA,
-    accuracy: float = ACCURACY,
-    max_iter: int = MAX_ITER,
-    n_partitions: int | None = None,
-) -> SGDResult:
-    """Fit by the reference's iterate-average-until-stop loop.
+def _iteration_input(points: DataFrame, n_part: int) -> tuple[DataFrame, int]:
+    """The frame every iteration sweeps, and the feature width d.
 
-    ``points``: ``(row_id bigint, y double, features array<double>)`` with
-    bias pre-injected at ``features[0]``. ``link``: ``linear`` | ``logistic``.
-    """
-    if link not in ("linear", "logistic"):
-        raise ValueError(f"unknown link {link!r}")
+    Rows are cut into ``n_part`` splits of equal row_id WIDTH, like the
+    reference's map splits, and the splits are spread over
+    ``min(n_part, defaultParallelism)`` partitions in contiguous groups,
+    each partition sorted by ``row_id``. Columns: ``split int, y,
+    x0..x{d-1}``."""
     spark = points.sparkSession
-    n_part = n_partitions or points.rdd.getNumPartitions()
-    # Deterministic layout → reproducible trajectory averaging (SURVEY
-    # §7.2). repartitionByRange is NOT deterministic (r11 finding: its
-    # boundaries are reservoir-sampled with an RDD-id-dependent seed),
-    # so the split id is computed by exact integer arithmetic over the
-    # row_id domain — contiguous ranges, like the reference's map
-    # splits — and each split is placed on its own partition exactly
-    # via the salt lookup (one cheap min/max agg + one tiny probe job,
-    # once per fit, never per iteration).
-    # ONE setup job: row_id bounds AND the feature width d — the old
-    # separate `pts.select("features").first()` head job cost a second
-    # scan-sized action per fit (r18 probe: 0.4-0.5 s of the warm
-    # total, the cache build it forced just moves into iteration 1's
-    # collect). min(size) is deterministic over any row order; for the
-    # (uniform-d) fixtures it equals the old first-row d exactly, and
-    # a ragged frame — already undefined behavior for the sweep — now
-    # fails on the short row rather than on whichever row happened to
-    # land first.
+    n_task = min(n_part, spark.sparkContext.defaultParallelism)
+    # one set-up job for the row_id bounds and d; min(size) is
+    # deterministic over any row order, and a ragged frame (undefined
+    # for the sweep) fails on its shortest row
     bounds = points.select(
         F.min("row_id").alias("lo"),
         F.max("row_id").alias("hi"),
@@ -391,22 +397,20 @@ def sgd_fit(
         )
     lo, span = bounds["lo"], bounds["hi"] - bounds["lo"] + 1
     d = bounds["d"]
-    salts = _exact_partition_salts(spark, n_part)
-    # Equal-WIDTH buckets via one integer DIV: exact at any id
-    # magnitude (a double-rounded floor could misassign boundary rows)
-    # and overflow-free — the review found ((row_id-lo)*n_part) can
-    # exceed BIGINT when the id domain is monotonically_increasing_id's
-    # sparse (scan_partition << 33) layout at very large scan-partition
-    # counts, while (row_id-lo) DIV width never leaves [0, n_part).
-    # Semantics note (same review): with mid-style sparse ids the
-    # domain buckets track SCAN-BLOCK granularity, not row rank — if
-    # the scan has fewer blocks than n_partitions the fit runs fewer
-    # effective trajectories. That is Hadoop's own split semantics
-    # (mappers never outnumber input splits, the reference can't
-    # either), kept deliberately; it is OBSERVABLE, not silent, via
-    # SGDResult.n_splits_effective below.
+    # Equal-width buckets via one integer DIV: exact at any id magnitude
+    # (a double-rounded floor could misassign boundary rows) and
+    # overflow-free — ((row_id-lo)*n_part) can exceed BIGINT for
+    # monotonically_increasing_id's sparse (scan_partition << 33)
+    # layout, while (row_id-lo) DIV width never leaves [0, n_part).
+    # With such sparse ids the buckets track SCAN-BLOCK granularity, not
+    # row rank, so a scan with fewer blocks than n_part runs fewer
+    # trajectories — Hadoop's own split semantics (mappers never
+    # outnumber input splits), reported as SGDResult.n_splits_effective.
     width = -(-span // n_part)  # exact ceil(span / n_part)
     split = F.expr(f"CAST(((row_id - {lo}L) DIV {width}L) AS INT)")
+    # split p goes to partition p * n_task // n_part: contiguous groups,
+    # placed exactly by the salt whose hash slot is that partition
+    salts = _exact_partition_salts(spark, n_task)
     pts = (
         points.withColumn(
             "__salt",
@@ -415,35 +419,64 @@ def sgd_fit(
             # differs from the same value as a LONG — an int literal
             # here would land splits on the wrong partitions
             F.element_at(
-                F.array(*[F.lit(s).cast("bigint") for s in salts]),
+                F.array(
+                    *[
+                        F.lit(salts[p * n_task // n_part]).cast("bigint")
+                        for p in range(n_part)
+                    ]
+                ),
                 split + F.lit(1),
             ),
         )
-        .repartition(n_part, "__salt")
+        .repartition(n_task, "__salt")
+        # splits are row_id ranges, so this keeps each split contiguous
+        # and the splits in order inside a partition
         .sortWithinPartitions("row_id")
-        # FLAT float64 columns (r18): array<double> crossed the Arrow
-        # boundary as a child-array-with-offsets that pandas turns
-        # into one ndarray object PER ROW; y, x0..x{d-1} cross as d+1
-        # contiguous float64 buffers the native sweep reads zero-copy.
-        # Same values, same order — the kernel's float sequence is
-        # untouched (probe_sgd_flat_r18.json: theta bit-equal).
+        # flat float64 columns cross the Arrow boundary as contiguous
+        # buffers the native sweep reads zero-copy (an array<double>
+        # column arrives as one ndarray object per row)
         .select(
+            split.alias("split"),
             "y",
             *[F.col("features").getItem(j).alias(f"x{j}") for j in range(d)],
         )
     )
+    return pts, d
+
+
+def sgd_fit(
+    points: DataFrame,
+    link: str = "linear",
+    alpha: float = ALPHA,
+    accuracy: float = ACCURACY,
+    max_iter: int = MAX_ITER,
+    n_partitions: int | None = None,
+) -> SGDResult:
+    """Fit by the reference's iterate-average-until-stop loop.
+
+    ``points``: ``(row_id bigint, y double, features array<double>)`` with
+    bias pre-injected at ``features[0]``. ``link``: ``linear`` | ``logistic``.
+    ``n_partitions`` is the number of map splits (default: the input's
+    partition count); θ depends on it, not on the session's core count.
+    """
+    if link not in ("linear", "logistic"):
+        raise ValueError(f"unknown link {link!r}")
+    n_part = n_partitions or points.rdd.getNumPartitions()
+    pts, d = _iteration_input(points, n_part)
     pts.persist()
     try:
         so_path = _native_kernel_path()
         theta = np.zeros(d)  # logisticreg.java:161-164
+        # an empty split contributes what a sweep over no rows yields
+        zero = (True, 0, np.zeros(d))
         converged = False
         it = 0
-        # max_iter <= 0 means the loop body never binds `partials`; the
-        # zero-theta result must still return (r11 advisor, low) with
-        # n_splits_effective = 0 — no sweep ever touched a split
-        partials: list = []
+        # with max_iter <= 0 no sweep runs: zero theta, no split touched,
+        # nothing ran native
+        native = max_iter > 0
+        by_split: dict[int, tuple] = {}
         for it in range(1, max_iter + 1):
-            partials = pts.mapInPandas(
+            rows = pts.mapInPandas(
                 _partition_kernel(
                     tuple(float(t) for t in theta),
                     alpha,
@@ -453,10 +486,17 @@ def sgd_fit(
                 ),
                 schema=_PARTIAL_SCHEMA,
             ).collect()
-            total = sum(r["n"] for r in partials)
-            snap = np.sum([np.asarray(r["theta_sum"]) for r in partials], axis=0)
+            native = native and all(r["native"] for r in rows)
+            by_split = {
+                r["split"]: (r["all_continue"], r["n"], np.asarray(r["theta_sum"]))
+                for r in rows
+            }
+            # the reducer sums in split order whatever the task count
+            partials = [by_split.get(p, zero) for p in range(n_part)]
+            total = sum(n for _, n, _ in partials)
+            snap = np.sum([s for _, _, s in partials], axis=0)
             theta = snap / total  # reducer average, logisticreg.java:136-138
-            if not all(r["all_continue"] for r in partials):
+            if not all(c for c, _, _ in partials):
                 converged = True  # stop rule, logisticreg.java:203
                 break
         LAST_FIT_ITERATIONS[link] = it
@@ -464,9 +504,8 @@ def sgd_fit(
             theta=theta.tolist(),
             iterations=it,
             converged=converged,
-            # every partition yields one partial (n=0 when empty), so
-            # this is a free byproduct of the last iteration's combine
-            n_splits_effective=sum(1 for r in partials if r["n"] > 0),
+            n_splits_effective=len(by_split),
+            native=native,
         )
     finally:
         pts.unpersist()
@@ -474,12 +513,23 @@ def sgd_fit(
 
 def sgd_fit_df(points: DataFrame, link: str = "linear", **kw) -> DataFrame:
     """DataFrame wrapper for the driver contract: one row per coefficient
-    ``(coef_idx int, theta double, iterations int, converged boolean)``."""
+    ``(coef_idx int, theta double, iterations int, converged boolean)``.
+
+    Built from pandas over Arrow, so it plans as a JVM ``LocalTableScan``;
+    a list of tuples would become a Python RDD that reruns Python tasks
+    on every action."""
     res = sgd_fit(points, link=link, **kw)
-    spark = points.sparkSession
-    return spark.createDataFrame(
-        [(i, t, res.iterations, res.converged) for i, t in enumerate(res.theta)],
-        "coef_idx int, theta double, iterations int, converged boolean",
+    k = len(res.theta)
+    pdf = pd.DataFrame(
+        {
+            "coef_idx": np.arange(k, dtype=np.int32),
+            "theta": np.asarray(res.theta, dtype=np.float64),
+            "iterations": np.full(k, res.iterations, dtype=np.int32),
+            "converged": np.full(k, res.converged, dtype=bool),
+        }
+    )
+    return points.sparkSession.createDataFrame(
+        pdf, "coef_idx int, theta double, iterations int, converged boolean"
     )
 
 

@@ -5,14 +5,21 @@ decimal-exact oracle parity for the OLS stats."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
+import mapreduce_code_spark.operators.regression as R
 from mapreduce_code_spark.operators.regression import (
+    _iteration_input,
+    _partition_kernel,
     ols_solve,
     ols_stats_exact,
     ols_stats_exact_sql,
     sgd_fit,
+    sgd_fit_df,
 )
+from mapreduce_code_spark.session import restore_confs
 from tests.helpers import assert_parity
 
 
@@ -218,13 +225,11 @@ def test_sgd_sparse_row_id_domain_tracks_scan_blocks(spark, linear_micro):
 
 
 def test_native_sweep_bit_equals_python_fallback(linear_micro, separable_micro):
-    """r18: the per-record sweep compiles to C (guide §4.2) with the
-    identical IEEE op sequence; a cluster executor without the .so
-    falls back to the pure-Python loop. The two paths must produce
-    BIT-IDENTICAL theta trajectories — this pins it through the real
-    sgd_fit on both links (the sigmoid path exercises libm exp)."""
-    import mapreduce_code_spark.operators.regression as R
-
+    """The per-record sweep compiles to C with the identical IEEE op
+    sequence; an executor without the .so falls back to the pure-Python
+    loop. The two paths must produce BIT-IDENTICAL theta trajectories —
+    this pins it through the real sgd_fit on both links (the sigmoid
+    path exercises libm exp) — and each fit must report which path ran."""
     if not R._native_kernel_path():
         pytest.skip("no C compiler on this host — python path is the only path")
     for pts, link in ((linear_micro, "linear"), (separable_micro, "logistic")):
@@ -238,3 +243,109 @@ def test_native_sweep_bit_equals_python_fallback(linear_micro, separable_micro):
         assert native.theta == python.theta, link  # bitwise: == on floats
         assert native.iterations == python.iterations
         assert native.converged == python.converged
+        assert native.native and not python.native
+
+
+def test_sgd_fit_reports_an_unloadable_kernel(linear_micro, monkeypatch):
+    """A .so path the executor cannot load runs the Python loop — same
+    bits — and the fit says so through SGDResult.native."""
+    want = sgd_fit(linear_micro, link="linear", max_iter=3, n_partitions=4)
+    monkeypatch.setattr(R, "_NATIVE_SO", "/nonexistent/sweep.so")
+    got = sgd_fit(linear_micro, link="linear", max_iter=3, n_partitions=4)
+    assert not got.native
+    assert (got.theta, got.iterations) == (want.theta, want.iterations)
+
+
+def _batch(split, y, xs):
+    return pd.DataFrame(
+        {"split": np.asarray(split, dtype=np.int32), "y": y,
+         **{f"x{j}": x for j, x in enumerate(xs)}}
+    )
+
+
+@pytest.mark.parametrize("native", [False, True])
+def test_kernel_resets_theta_at_a_split_boundary_inside_a_batch(native):
+    """One batch holding splits 3 and 5 yields exactly the partials of
+    sweeping each split alone from the same theta; ``so_path=""`` runs
+    the Python loop and flags every partial ``native=False``."""
+    so = R._native_kernel_path() if native else ""
+    if native and not so:
+        pytest.skip("no C compiler on this host")
+    rng = np.random.default_rng(5)
+    y, x0, x1 = rng.normal(size=(3, 11))
+    split = [3] * 4 + [5] * 7
+    theta = (0.1, -0.2)
+    kern = _partition_kernel(theta, 0.03, 0.0, "linear", so)
+    together = pd.concat(kern(iter([_batch(split, y, [x0, x1])])))
+    alone = pd.concat(
+        [
+            *kern(iter([_batch(split[:4], y[:4], [x0[:4], x1[:4]])])),
+            *kern(iter([_batch(split[4:], y[4:], [x0[4:], x1[4:]])])),
+        ]
+    )
+    assert together["split"].tolist() == [3, 5]
+    assert together["n"].tolist() == [4, 7]
+    assert together["native"].tolist() == [native, native]
+    for col in ("split", "n", "all_continue"):
+        assert together[col].tolist() == alone[col].tolist()
+    assert [list(t) for t in together["theta_sum"]] == [
+        list(t) for t in alone["theta_sum"]
+    ]
+    assert list(kern(iter([]))) == []  # a task with no rows emits nothing
+
+
+def test_sgd_fit_invariant_to_task_layout_and_arrow_batches(
+    spark, linear_micro, monkeypatch
+):
+    """Splits ride min(n_partitions, defaultParallelism) tasks in
+    contiguous groups. With 7-row Arrow batches a batch straddles split
+    boundaries; theta, iterations and n_splits_effective must still be
+    bit-equal to the default batch size, for more splits than cores and
+    for fewer, on both the native and the Python sweep."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    cores = spark.sparkContext.defaultParallelism
+    so = R._native_kernel_path()
+    for n_part in (8, 3):
+        pts, _ = _iteration_input(linear_micro, n_part)
+        assert pts.rdd.getNumPartitions() == min(n_part, cores)
+        groups = (
+            pts.groupBy(F.spark_partition_id().alias("task"))
+            .agg(F.min("split").alias("lo"), F.max("split").alias("hi"))
+            .orderBy("task")
+            .collect()
+        )
+        # every split sits in one task and the groups are contiguous
+        assert [g["lo"] for g in groups[1:]] == [g["hi"] + 1 for g in groups[:-1]]
+        for sweep_so in {so, ""}:
+            monkeypatch.setattr(R, "_NATIVE_SO", sweep_so)
+            fits = []
+            for batch in (None, "7"):
+                prev = {key: spark.conf.get(key, None)}
+                if batch:
+                    spark.conf.set(key, batch)
+                try:
+                    fits.append(
+                        sgd_fit(linear_micro, link="linear", alpha=0.1,
+                                accuracy=0.0, max_iter=2, n_partitions=n_part)
+                    )
+                finally:
+                    restore_confs(spark, prev)
+            want, got = fits
+            assert got.theta == want.theta, (n_part, sweep_so)
+            assert got.iterations == want.iterations == 2
+            assert got.n_splits_effective == want.n_splits_effective == n_part
+            assert got.native == want.native == bool(sweep_so)
+
+
+def test_sgd_fit_df_is_a_local_relation(linear_micro):
+    """The 4-row result must plan as a JVM LocalTableScan: a Python RDD
+    (Scan ExistingRDD) would rerun Python tasks on every action."""
+    df = sgd_fit_df(linear_micro, link="linear", max_iter=2, n_partitions=2)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    res = sgd_fit(linear_micro, link="linear", max_iter=2, n_partitions=2)
+    rows = sorted(df.collect(), key=lambda r: r["coef_idx"])
+    assert [r["theta"] for r in rows] == res.theta
+    assert {(r["iterations"], r["converged"]) for r in rows} == {
+        (res.iterations, res.converged)
+    }
