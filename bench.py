@@ -359,10 +359,9 @@ EAGER_STREAMS = {
     "pipeline_ingest_manifest",
     "pipeline_ingest_hash_log",
 }
-EAGER_LOOPS = {  # driver iteration loops: SGD fits, components fixpoints
+EAGER_LOOPS = {  # driver iteration loops: SGD fits, components fixpoint
     "regression_sgd_linear",
     "regression_sgd_logistic",
-    "dedup_components",
     "dedup_components_starcontract",
 }
 EAGER_WRITES = {  # physical rewrite at build, result localCheckpointed

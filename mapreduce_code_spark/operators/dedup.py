@@ -740,29 +740,7 @@ WHERE shared / (ns.sz + cs.sz - shared) >= {threshold}
 """
 
 
-def _materialize_undirected(pairs: DataFrame) -> DataFrame:
-    """Both-direction edge frame ``(doc_a, doc_b)``, materialized ONCE —
-    the shared entry invariant of both components algorithms. ``pairs``
-    is typically the lazy plan of the whole near-dup pipeline, and
-    without the checkpoint every iteration round would re-run shingling
-    + LSH + rerank from scratch (measured 19s → ~4s at sf0.1).
-    coalesce(8): the edge list is orders of magnitude smaller than the
-    corpus, so per-round task overhead, not data volume, dominates the
-    loops — fewer/larger tasks win; at genuinely large edge counts AQE
-    re-splits the joins anyway."""
-    edges = pairs.select("doc_a", "doc_b")
-    return (
-        edges.unionByName(
-            edges.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
-        )
-        .coalesce(8)
-        .localCheckpoint()
-    )
-
-
-def dup_components(pairs: DataFrame, max_iters: int = 30) -> DataFrame:
+def dup_components_star(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     """Connected components over near-dup pairs: the production dedup
     step that pair lists alone can't do — near-duplication is transitive
     in practice (A≈B, B≈C ⇒ keep one of {A,B,C}), so the keeper must be
@@ -770,68 +748,9 @@ def dup_components(pairs: DataFrame, max_iters: int = 30) -> DataFrame:
     is_keeper)`` for every doc appearing in a pair; ``component`` is the
     cluster's minimum doc_id and the keeper is that document.
 
-    Algorithm: min-label propagation — iterate ``label(v) ← min(label(v),
-    min over neighbors)`` to a fixpoint. Each iteration is one join + one
-    groupBy-min (map-side combined); labels are monotone non-increasing,
-    so convergence is detected by the label-sum plateauing (one scalar
-    per iteration to the driver, like the SGD loop — SURVEY §2.12 I2).
-    Iterations = eccentricity of each cluster's min node; near-dup
-    clusters are shallow, and a production petabyte deployment with
-    adversarially long chains would swap in the large-star/small-star
-    variant (same per-iteration plan shape, O(log n) rounds).
-    """
-    und = _materialize_undirected(pairs)
-    # localCheckpoint each iteration: the labels frame would otherwise
-    # embed every previous iteration's plan (lineage grows exponentially
-    # and the analyzer itself OOMs past ~30 rounds — measured). Cutting
-    # lineage also makes each round's shuffle read a materialized input,
-    # the same discipline iterative graph libraries use.
-    labels = (
-        und.select(F.col("doc_a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    prev = labels.agg(F.sum("label")).collect()[0][0]
-    for _ in range(max_iters):
-        nbr = (
-            und.join(labels, und["doc_b"] == labels["node"])
-            .groupBy("doc_a")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        labels = (
-            labels.join(nbr, labels["node"] == nbr["doc_a"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        cur = labels.agg(F.sum("label")).collect()[0][0]
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        # pathological chain (rounds needed = eccentricity of the
-        # cluster's min node) — hand the already-materialized edge list
-        # to the O(log n)-round star-contraction variant instead of
-        # failing the job
-        return _star_contract_labels(und)
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        F.col("label").alias("component"),
-        (F.col("node") == F.col("label")).alias("is_keeper"),
-    )
-
-
-def _star_contract_labels(und: DataFrame, max_iters: int = 25) -> DataFrame:
-    """Core of the large-star/small-star connected-components algorithm
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — a published algorithm, re-expressed as DataFrame ops) over
-    a materialized undirected edge frame ``(doc_a, doc_b)`` containing
-    both directions.
+    Algorithm: large-star/small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14 — a
+    published algorithm, re-expressed as DataFrame ops).
 
     Alternating rounds:
 
@@ -854,6 +773,22 @@ def _star_contract_labels(und: DataFrame, max_iters: int = 25) -> DataFrame:
     stars to themselves, and edge transformations preserve
     connectivity, so a star component is final.
     """
+    # Both-direction edge frame, materialized ONCE: ``pairs`` is
+    # typically the lazy plan of the whole near-dup pipeline, and without
+    # the checkpoint every round would re-run shingling + LSH + rerank
+    # from scratch (measured 19s → ~4s at sf0.1). coalesce(8): the edge
+    # list is orders of magnitude smaller than the corpus, so per-round
+    # task overhead, not data volume, dominates the loop.
+    edges = pairs.select("doc_a", "doc_b")
+    und = (
+        edges.unionByName(
+            edges.select(
+                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
+            )
+        )
+        .coalesce(8)
+        .localCheckpoint()
+    )
     # canonical orientation: (u, v) with v < u; both star steps re-emit
     # canonically so this holds every round. The edge list is orders of
     # magnitude smaller than the corpus (it's the near-dup pair set), so
@@ -937,20 +872,6 @@ def _star_contract_labels(und: DataFrame, max_iters: int = 25) -> DataFrame:
                 "is_keeper"
             ),
         )
-    )
-
-
-def dup_components_star(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
-    """Connected components over near-dup pairs via large-star/small-star
-    contraction — same contract as :func:`dup_components` (``(doc_id,
-    component, is_keeper)``, component = cluster min), but round count is
-    O(log n) in the largest cluster size instead of its eccentricity, so
-    adversarially deep chains (the case :func:`dup_components` can't
-    finish inside its iteration budget) converge. Prefer this variant
-    when cluster shape is unknown; min-label propagation wins only when
-    clusters are known-shallow (fewer, cheaper rounds)."""
-    return _star_contract_labels(
-        _materialize_undirected(pairs), max_iters=max_iters
     )
 
 
@@ -1040,10 +961,10 @@ WHERE shared / (sa.sz + sb.sz - shared) >= {threshold}
 def dup_components_sql(
     threshold: float = 0.2, n_hashes: int = 12, band_size: int = 3
 ) -> str:
-    """DuckDB twin of ``near_dup_pairs_scalable |> dup_components``: the
-    same pair pipeline, then component labels via a recursive
-    reachability CTE (min reachable doc_id per node — identical to the
-    propagation fixpoint)."""
+    """DuckDB twin of ``near_dup_pairs_scalable |> dup_components_star``:
+    the same pair pipeline, then component labels via a recursive
+    reachability CTE (min reachable doc_id per node — the component
+    minimum the star-contraction fixpoint labels every node with)."""
     return f"""
 WITH RECURSIVE sh AS ({SHINGLES_SQL}),
 {_sigs_bands_cte_sql(n_hashes, band_size)},

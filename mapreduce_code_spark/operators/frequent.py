@@ -68,7 +68,8 @@ class AprioriConfig:
     # False (default): canonical sorted-set identity — "a b" == "b a",
     # enforced here regardless of input array order. True: faithful
     # reference replay — itemset keys preserve the basket's item order
-    # (apriori_final.java:82-93), so "b a" != "a b".
+    # (apriori_final.java:82-93), so "b a" != "a b". No registered row
+    # runs it; tests/test_apriori.py checks it against a DuckDB oracle.
     ordered_identity: bool = False
 
 
@@ -136,45 +137,3 @@ def frequent_itemsets(
         counts = counts.filter(F.col("cnt") >= F.lit(config.support))
     return counts
 
-
-def frequent_itemsets_udtf(
-    tx: DataFrame,
-    config: AprioriConfig = AprioriConfig(),
-) -> DataFrame:
-    """Python-UDTF formulation of :func:`frequent_itemsets` (SURVEY
-    §2.11): the subset generator emits rows directly via a lateral join
-    instead of materializing a per-basket array for ``explode``. Same
-    result; the UDTF path streams candidates without building the
-    intermediate list column, which matters when a basket's subset fan-out
-    is large."""
-    spark = tx.sparkSession
-    freq = frequent_items(tx, config.support)
-    vocab_b = spark.sparkContext.broadcast(
-        frozenset(r["item"] for r in freq.select("item").collect())
-    )
-    min_size = 1 if config.emit_singletons else 2
-    max_size = config.max_itemset_size
-    ordered = config.ordered_identity
-
-    @F.udtf(returnType="itemset string")
-    class SubsetGen:
-        def eval(self, items):
-            fv = vocab_b.value
-            kept = [x for x in (items or []) if x in fv]
-            if not ordered:
-                kept = sorted(kept)
-            for k in range(max(min_size, 2), min(max_size, len(kept)) + 1):
-                for c in combinations(kept, k):
-                    yield (" ".join(c),)
-            if min_size == 1:
-                for x in kept:
-                    yield (x,)
-
-    counts = (
-        tx.lateralJoin(SubsetGen(F.col("items").outer()))
-        .groupBy("itemset")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    if config.reduce_side_having:
-        counts = counts.filter(F.col("cnt") >= F.lit(config.support))
-    return counts

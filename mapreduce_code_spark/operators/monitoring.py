@@ -292,7 +292,9 @@ def attribution_last_touch(
     page-level aggregate; the fact table is scanned once.
 
     Beyond-reference surface (attribution joins funnel/retention in the
-    product-analytics family)."""
+    product-analytics family). The registered row runs the stateful
+    stream instead; this batch pass is the reference the stateful,
+    monitoring and property tests compare that stream against."""
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")

@@ -87,7 +87,10 @@ def association_rules(
 
     Returns ``(antecedent, consequent, itemset, sub_cnt, full_cnt,
     confidence)`` — plus ``rule`` (the reference's formatted string,
-    ``apriori_raw.java:271-273``) in faithful mode.
+    ``apriori_raw.java:271-273``) in faithful mode. The registered row
+    runs faithful mode; the canonical A=>B mode (``faithful=False``) is
+    kept as the textbook rule set, and tests/test_rules.py checks it
+    against a DuckDB oracle.
     """
     gen = _antecedents_udf(min_antecedent_size, faithful)
     full = itemset_counts.select(

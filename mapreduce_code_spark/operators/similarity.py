@@ -1,8 +1,8 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Brute-force cosine top-k is the correctness baseline; the LSH-bucketed
-variant is the scale path (candidate generation via random-hyperplane
-sign buckets, then exact re-rank inside buckets).
+Brute-force cosine top-k is the correctness baseline; the IVF serving
+path with a pinned coarse quantizer is the scale path (probe-bounded
+candidate scan, then exact re-rank of the probed cells).
 
 Cross-engine exactness: float dot products are summation-order-dependent,
 so Spark and a DuckDB oracle would disagree in the last ulps — enough to
@@ -24,11 +24,8 @@ full cross product; at 100 TB the block key becomes the LSH bucket.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from mapreduce_code_spark.partitioning import spread
 
@@ -160,7 +157,7 @@ def cosine_dup_pairs(
     """Embedding-cosine near-duplicate pairs inside blocking groups.
 
     Joins only within ``block_col`` (at 100 TB the block key is an LSH
-    bucket — see :func:`lsh_buckets`), computes the exact cosine, and
+    bucket), computes the exact cosine, and
     keeps pairs >= threshold. Returns ``(vec_a, vec_b, cosine)``.
     """
     e = with_norm(embeddings)
@@ -230,206 +227,19 @@ WHERE d.dot / (na.norm * nb.norm) >= {threshold}
 """
 
 
-LSH_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("bucket", T.LongType()),
-    ]
-)
-
-
-def lsh_buckets(
-    embeddings: DataFrame, n_planes: int = 8, seed: int = 42, dim: int = 64
-) -> DataFrame:
-    """Random-hyperplane LSH buckets — the scale path for candidate
-    generation (SimHash-for-vectors): bucket = sign-bit pattern of
-    ``n_planes`` fixed random projections.
-
-    Vectorized per Arrow batch (one matmul per batch, no per-row Python);
-    planes derive from a fixed seed so buckets are reproducible. Not
-    SQL-expressible (matrix RNG) → rows-only oracle check; recall is
-    asserted against brute force in tests.
-    """
-    planes = np.random.default_rng(seed).standard_normal((dim, n_planes))
-
-    def assign(batches):
-        for pdf in batches:
-            vecs = np.stack(pdf["embedding"].to_numpy())
-            signs = (vecs @ planes) > 0
-            buckets = signs @ (1 << np.arange(n_planes))
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "bucket": buckets.astype("int64")}
-            )
-
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        assign, schema=LSH_SCHEMA
-    )
-
-
-def ivf_centroids(
-    embeddings: DataFrame,
-    n_clusters: int = 16,
-    n_iters: int = 2,
-    train_sample_bp: int | None = None,
-) -> np.ndarray:
-    """Coarse quantizer for IVF: Lloyd's k-means, Spark-distributed.
-
-    - init: the ``n_clusters`` lowest vec_ids (deterministic, seed-free);
-    - assignment: one vectorized matmul per Arrow batch (``mapInPandas``
-      with the centroid matrix broadcast) — no per-row Python;
-    - update: ``posexplode`` → groupBy (cluster, pos) → avg, one shuffle
-      of O(rows·dim) scalars with map-side partial aggregation; the
-      (n_clusters × dim) result collects to the driver each iteration.
-
-    ``train_sample_bp`` (basis points) trains on a deterministic hash
-    sample of the corpus — the 100 TB knob: a coarse quantizer needs a
-    representative sample, not every vector, so the per-iteration
-    training scan drops from |corpus| to |sample| while the one
-    full-corpus assignment pass in :func:`ivf_topk` is unchanged. The
-    sample is keyed (``sampling.key_bucket``), so it is layout-stable
-    and reproducible like every sample in this engine.
-
-    At 100 TB the assignment scan dominates and is embarrassingly
-    parallel; n_iters is small because IVF needs a coarse partition of
-    space, not a converged clustering. Returns the centroid matrix.
-    """
-    if train_sample_bp is not None:
-        from mapreduce_code_spark.operators.sampling import key_bucket
-
-        embeddings = embeddings.filter(
-            key_bucket(F.col("vec_id")) < train_sample_bp
-        )
-    init = (
-        embeddings.select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .limit(n_clusters)
-        .collect()
-    )
-    centroids = np.stack([np.asarray(r["embedding"], dtype="float64") for r in init])
-    sc = embeddings.sparkSession.sparkContext
-    for _ in range(n_iters):
-        cent_b = sc.broadcast(centroids)
-
-        def assign(batches):
-            c = cent_b.value
-            c_sq = (c * c).sum(axis=1)
-            for pdf in batches:
-                vecs = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-                d2 = c_sq[None, :] - 2.0 * (vecs @ c.T)  # ||v||² constant per row
-                yield pd.DataFrame(
-                    {
-                        "cluster": np.argmin(d2, axis=1).astype("int32"),
-                        "embedding": pdf["embedding"],
-                    }
-                )
-
-        assigned = embeddings.select("embedding").mapInPandas(
-            assign, schema="cluster int, embedding array<float>"
-        )
-        means = (
-            assigned.select("cluster", F.posexplode("embedding").alias("pos", "x"))
-            .groupBy("cluster", "pos")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        new = centroids.copy()  # empty clusters keep their old centroid
-        for r in means:
-            new[r["cluster"], r["pos"]] = r["m"]
-        centroids = new
-        cent_b.destroy()
-    return centroids
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    n_queries: int = 5,
-    k: int = 10,
-    n_clusters: int = 16,
-    nprobe: int = 4,
-    n_iters: int = 2,
-    train_sample_bp: int | None = None,
-) -> DataFrame:
-    """IVF ANN top-k: train a coarse quantizer, assign every vector to its
-    nearest centroid (the inverted file), probe each query's ``nprobe``
-    nearest cells, and exact-re-rank only those candidates.
-
-    Scan cost drops to ~nprobe/n_clusters of brute force; recall is
-    tunable via nprobe (asserted against :func:`topk_cosine` in tests).
-    ``train_sample_bp`` trains the quantizer on a hash sample (see
-    :func:`ivf_centroids`). Not SQL-expressible (iterative training) →
-    rows-only oracle check.
-    """
-    centroids = ivf_centroids(embeddings, n_clusters, n_iters, train_sample_bp)
-    sc = embeddings.sparkSession.sparkContext
-    cent_b = sc.broadcast(centroids)
-
-    def assign_cells(batches):
-        c = cent_b.value
-        c_sq = (c * c).sum(axis=1)
-        for pdf in batches:
-            vecs = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            d2 = c_sq[None, :] - 2.0 * (vecs @ c.T)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cell": np.argmin(d2, axis=1).astype("int32")}
-            )
-
-    def probe_cells(batches):
-        c = cent_b.value
-        c_sq = (c * c).sum(axis=1)
-        for pdf in batches:
-            vecs = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            d2 = c_sq[None, :] - 2.0 * (vecs @ c.T)
-            near = np.argsort(d2, axis=1, kind="stable")[:, :nprobe]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(pdf["vec_id"].to_numpy(), nprobe),
-                    "cell": near.reshape(-1).astype("int32"),
-                }
-            )
-
-    cells = embeddings.select("vec_id", "embedding").mapInPandas(
-        assign_cells, schema="vec_id long, cell int"
-    )
-    queries = embeddings.filter(F.col("vec_id") < n_queries)
-    probes = queries.select("vec_id", "embedding").mapInPandas(
-        probe_cells, schema="query_id long, cell int"
-    )
-    q = with_norm(queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
-    # (query, probed cell, query vector) — tiny: n_queries × nprobe rows
-    probe_q = probes.join(q, "query_id").withColumnRenamed("cell", "probe_cell")
-    cand = with_norm(embeddings).join(cells, "vec_id")
-    cos = dot_exact(F.col("qv"), F.col("embedding")).cast("double") / (
-        F.col("qnorm") * F.col("norm")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        cand.join(F.broadcast(probe_q), F.col("cell") == F.col("probe_cell"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cosine", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "cosine")
-    )
-
-
 def _pinned_d2s(centroids_q) -> "F.Column":
     """Array of EXACT integer squared distances from the row's quantized
     embedding (column ``qv``, the module's 1e-7 grid — see :func:`_q`)
     to each pinned centroid — pure literal algebra, row-local, fully
     whole-stage-codegen'd: the centroid matrix is compiled INTO the
-    plan, so assignment costs zero shuffles and zero Python (the 100 TB
-    shape the mapInPandas trainer can't give the serving path).
+    plan, so assignment costs zero shuffles and zero Python.
     Bounds: |q| ≤ 1e8 → per-element diff² ≤ 4e16, ×64 dims ≤ 2.6e18 <
     int64 max."""
     # Built as ONE parsed SQL expression, not composed Column objects:
     # the unrolled build (16 cells x 64 literal lit/cast Columns each)
     # cost thousands of py4j round-trips — 6-12 s of DRIVER time per
-    # fresh plan, dwarfing the ~1 s execution (r8 verdict #6a, measured
-    # before/after in SURVEY §9). transform() over one literal
+    # fresh plan, dwarfing the ~1 s execution (measured before/after in
+    # SURVEY §9). transform() over one literal
     # array-of-arrays is the same exact BIGINT algebra in the same cell
     # order, so assignment argmin ties and probe (d2, cell) orderings —
     # and therefore the DuckDB hash oracle — are unchanged.
@@ -455,18 +265,18 @@ def _pinned_cell(centroids_q) -> "F.Column":
 def derive_ivf_centroids(
     embeddings: DataFrame, n_clusters: int = 16, n_iters: int = 2
 ) -> list:
-    """The executable recipe behind ``IVF_CENTROIDS_Q`` (the
-    QUALITY_THETA precedent, r7 verdict #4): Lloyd's k-means re-derived
-    in EXACT integer arithmetic so the pinned table is bit-reproducible
+    """The executable recipe behind ``IVF_CENTROIDS_Q`` (pinned like
+    QUALITY_THETA, from a recipe a test re-runs): Lloyd's k-means in
+    EXACT integer arithmetic so the pinned table is bit-reproducible
     under ANY partitioning or host — no float-sum order dependence
     anywhere. Vectors quantize through the module's 1e-7 grid
     (:func:`_q`); assignment per iteration is the SAME literal-centroid
     integer-d2 argmin the serving path compiles (:func:`_pinned_cell`);
     the update rounds the exact integer per-(cell, pos) mean half-up —
     ``(2s + n) // (2n)`` — staying on the grid; empty cells keep their
-    centroid (``ivf_centroids``' convention, as is the deterministic
-    seed-free init from the ``n_clusters`` lowest vec_ids). Returns the
-    quantized centroid table as plain ints."""
+    centroid, and the init is the deterministic, seed-free
+    ``n_clusters`` lowest vec_ids. Returns the quantized centroid table
+    as plain ints."""
     qv = embeddings.select(
         "vec_id", F.transform("embedding", _q).alias("qv")
     )
@@ -497,16 +307,13 @@ def ivf_topk_pinned(
     k: int = 10,
     nprobe: int = 4,
 ) -> DataFrame:
-    """IVF ANN top-k SERVING path with a PINNED coarse quantizer (r7
-    verdict #4): with the centroid table fixed (``IVF_CENTROIDS_Q``,
-    derived once by :func:`derive_ivf_centroids` and pinned as
-    literals), assignment + nprobe probe + exact re-rank is pure
-    algebra — so unlike :func:`ivf_topk` (whose Lloyd training is
-    genuinely iterative, rows-only) this variant carries a full DuckDB
-    hash oracle (:func:`ivf_topk_pinned_sql`).
+    """IVF ANN top-k SERVING path with a PINNED coarse quantizer: with
+    the centroid table fixed (``IVF_CENTROIDS_Q``, derived once by
+    :func:`derive_ivf_centroids` and pinned as literals), assignment +
+    nprobe probe + exact re-rank is pure algebra, so the top-k carries
+    a full DuckDB hash oracle (:func:`ivf_topk_pinned_sql`).
 
-    Scale shape — strictly better than the trained variant's serving
-    half: cell assignment and query probing are row-local literal
+    Scale shape: cell assignment and query probing are row-local literal
     integer algebra (zero shuffles, zero Python, whole-stage codegen);
     the probe table (n_queries × nprobe rows + query vectors)
     broadcasts into the candidate scan, so the only exchange in the
@@ -643,41 +450,6 @@ SELECT query_id, vec_id, rank, cosine FROM ranked
 """
 
 
-def topk_cosine_lsh(
-    embeddings: DataFrame,
-    n_queries: int = 5,
-    k: int = 10,
-    n_planes: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """Bucketed ANN top-k: exact cosine re-rank restricted to candidates
-    sharing the query's LSH bucket. Approximate — recall depends on
-    n_planes; tests measure it against :func:`topk_cosine`."""
-    buckets = lsh_buckets(embeddings, n_planes=n_planes, seed=seed)
-    e = with_norm(embeddings).join(buckets, "vec_id")
-    q = e.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        F.col("bucket").alias("qbucket"),
-    )
-    cos = dot_exact(F.col("qv"), F.col("embedding")).cast("double") / (
-        F.col("qnorm") * F.col("norm")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        e.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("qbucket"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .withColumn("cosine", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "cosine")
-    )
-
-
 # ------------------------------------------------- int8 quantization
 
 def _int8_scale():
@@ -693,9 +465,9 @@ def _int8_scale():
 
 
 def _int8_code(x, scale):
-    """Clamped round-half-up int8 code for ONE element — the single
-    quantization definition shared by the oracled codes query and the
-    quantized search, so the two can never drift apart."""
+    """Clamped round-half-up int8 code for ONE element, at the scale
+    :func:`_int8_scale` gives — both mirror :func:`quantize_int8_sql`
+    step for step."""
     return F.least(
         F.lit(127).cast("long"),
         F.greatest(
@@ -1089,63 +861,6 @@ FROM scored s LEFT JOIN pruned pr ON pr.v = s.vec_id
 """
 
 
-def topk_cosine_int8(
-    embeddings: DataFrame, n_queries: int = 5, k: int = 10
-) -> DataFrame:
-    """Brute-force cosine top-k over int8-QUANTIZED vectors — same plan
-    shape as :func:`topk_cosine` (queries broadcast, shuffle-free
-    candidate scan, WindowGroupLimit top-k) but the per-pair dot runs on
-    int8 codes: the per-vector scales cancel in the cosine, so the score
-    is ``dot_q / (|q_a| |q_b|)`` in pure integer math + one double
-    division. Approximate (quantization error ~1/254 per element) —
-    rows-only contract; the recall-vs-exact bound is pinned in tests.
-    """
-    scale = _int8_scale()
-    qv = F.when(
-        scale == 0, F.transform("embedding", lambda v: F.lit(0).cast("long"))
-    ).otherwise(
-        F.transform("embedding", lambda v: _int8_code(v, scale))
-    )
-    dot_q = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    e = embeddings.select("vec_id", qv.alias("qcodes")).withColumn(
-        "qnorm",
-        F.sqrt(
-            F.aggregate(
-                F.transform("qcodes", lambda x: x * x),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            ).cast("double")
-        ),
-    )
-    q = e.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qcodes").alias("qa"),
-        F.col("qnorm").alias("qanorm"),
-    )
-    cand = spread(
-        e.select(
-            "vec_id", F.col("qcodes").alias("qb"), F.col("qnorm").alias("qbnorm")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        cand.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            dot_q.cast("double") / (F.col("qanorm") * F.col("qbnorm")),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "cosine")
-    )
-
-
 # ------------------------------------------------- hybrid retrieval (RRF)
 
 RRF_K = 60  # the standard reciprocal-rank-fusion damping constant
@@ -1162,8 +877,8 @@ def keyword_ranked(
     Scale shape: the corpus explodes once into distinct (doc_id, word);
     the query-side word set is tiny and broadcast, so the corpus never
     shuffles for the join — only the overlap counts (already filtered to
-    matching candidates) hit a keyed exchange. Since r18 the leg runs
-    in THREE net exchanges (was five — plans/r18 pair):
+    matching candidates) hit a keyed exchange. The leg runs in THREE
+    net exchanges (the two-spread form ran five):
     - the query vocabulary comes from a PRUNED documents scan
       (``doc_id < n_queries`` reaches the parquet reader as a
       PushedFilter) instead of re-deriving it from the spread corpus —
@@ -1244,15 +959,15 @@ def hybrid_rrf(
     """Hybrid dense+sparse retrieval fused by reciprocal-rank fusion
     (Cormack, Clarke & Buettcher, SIGIR 2009 — public): the brute-cosine
     top-``k_leg`` (:func:`topk_cosine`) and the keyword-overlap
-    top-``k_leg`` (:func:`keyword_ranked`) are full-outer-joined per
-    (query, doc) and re-ranked by ``Σ 1/(rrf_k + rank)``. Ranks are
+    top-``k_leg`` (:func:`keyword_ranked`) are fused per (query, doc)
+    and re-ranked by ``Σ 1/(rrf_k + rank)``. Ranks are
     exact integers and the fusion is a fixed two-division IEEE sum, so
     the output hash-matches the DuckDB twin exactly — including the
     tie-break (score desc, doc_id asc). Returns
     ``(query_id, doc_id, r_dense, r_sparse, rrf_score, rank)``.
 
     The doc/vec id spaces coincide in the test corpus; in production the
-    dense leg's ANN variant (:func:`topk_lsh` / IVF) slots in for the
+    dense leg's ANN variant (:func:`ivf_topk_pinned`) slots in for the
     brute scan — fusion is rank-only, so the operator is agnostic to how
     each leg was produced."""
     dense = topk_cosine(embeddings, n_queries, k_leg).select(
@@ -1272,16 +987,18 @@ def hybrid_rrf(
         F.desc("rrf_score"), F.asc("doc_id")
     )
     # Fusion as UNION + per-(query, doc) aggregate instead of a
-    # FULL-OUTER join (r18, plans/r18 pair): each leg emits a (q, d)
-    # at most once, so max() over the ≤2 union rows reconstructs
-    # exactly the join's (r_dense, r_sparse) pairs — same row set,
-    # same values. The join needed THREE exchanges (both ~100-row legs
-    # re-shuffled from hash(q) to hash(q, d) for the SortMergeJoin,
-    # then the final window re-shuffled back to hash(q)); the union
-    # needs ONE ``repartition(query_id)``, which subset-key-satisfies
-    # the (q, d) aggregate AND the final rank window. Stage barriers
-    # dominate these tiny frames, and at scale the fused frame is
-    # n_queries x 2·k_leg rows — never a skew concern.
+    # FULL-OUTER join: each leg emits a (q, d) at most once, so max()
+    # over the ≤2 union rows reconstructs exactly the join's (r_dense,
+    # r_sparse) pairs — same row set, same values. The join needed
+    # THREE exchanges (both ~100-row legs re-shuffled from hash(q) to
+    # hash(q, d) for the SortMergeJoin, then the final window re-
+    # shuffled back to hash(q)). Both legs arrive hash(q)-partitioned,
+    # which subset-key-satisfies the (q, d) aggregate AND the final rank
+    # window, so the union's ``repartition(query_id)`` plans no exchange
+    # and the whole operator plans 5 net exchanges (dense leg 2, sparse
+    # leg 3) where the join form planned 11. Stage barriers dominate
+    # these tiny frames, and at scale the fused frame is n_queries x
+    # 2·k_leg rows — never a skew concern.
     fused = (
         dense.unionByName(sparse)
         .repartition(F.col("query_id"))

@@ -484,7 +484,7 @@ def ingest_training_set(
         # (written later this invocation) is never touched.
         #
         # The fold runs CONCURRENTLY with the batch's keeper window
-        # (r18, guide §2.6): the window and its localCheckpoint read
+        # (guide §2.6): the window and its localCheckpoint read
         # only the batch's own metadata, never the hash log, and the
         # first log reader — the history anti-join — waits on the fold
         # via the barrier below, so every ordering guarantee above is
@@ -500,10 +500,19 @@ def ingest_training_set(
                 spark,
                 staging_dir,
                 batch_id,
-                # defense-in-depth (r12): the construction argument above
+                # defense-in-depth: the construction argument above
                 # is also VERIFIED against the commit log
                 checkpoint_dir,
             )
+
+        def fold_error() -> BaseException | None:
+            # waits for the fold, so its failure surfaces even when the
+            # batch raised first
+            if pool is None:
+                return None
+            pool.shutdown(wait=True)
+            return compact_fut.exception()
+
         try:
             _ingest_batch(
                 batch, batch_id, staging_dir, min_quality, chunk_size,
@@ -512,13 +521,16 @@ def ingest_training_set(
                 # with (batch, batch_id, *args) signatures
                 compact_fut.result if compact_fut is not None else None,
             )
-        finally:
-            if pool is not None:
-                # surfaces a fold failure even when _ingest_batch raised
-                # first (shutdown waits; result() re-raises if unread)
-                pool.shutdown(wait=True)
-                if compact_fut is not None and compact_fut.exception():
-                    raise compact_fut.exception()
+        except BaseException as batch_exc:
+            fold_exc = fold_error()
+            if fold_exc is None or fold_exc is batch_exc:
+                raise
+            # both failed: the fold's failure propagates with the batch's
+            # own as its explicit cause, so neither is lost
+            raise fold_exc from batch_exc
+        fold_exc = fold_error()
+        if fold_exc is not None:
+            raise fold_exc
 
     _drive_foreach_batch(docs_stream, handle, checkpoint_dir)
     if not _dir_exists(spark, chunks_dir):
@@ -1103,7 +1115,9 @@ def epoch_manifest(
     rank exchange. At 100 TB this is the difference between an epoch
     flip costing a full curation pass and costing one shuffle of the
     surviving chunks; feed it to ``write_shuffled(salt=...)`` to
-    materialize the epoch instead of just describing it."""
+    materialize the epoch instead of just describing it. No registered
+    row returns it; tests/test_scale_patterns.py checks written bytes
+    against it."""
     rows = spark.read.parquet(shards_path).select(
         "doc_id", "chunk_id", "chunk_text", "pred_lang"
     )

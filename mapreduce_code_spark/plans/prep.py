@@ -56,7 +56,8 @@ def transactions_ordered(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     (``apriori_final.java:82-93``), where ``"b a"`` and ``"a b"`` are
     different itemsets. Same broadcast-join + single-shuffle plan as
     :func:`transactions`; the order column rides the collect_list and is
-    dropped after the in-group sort."""
+    dropped after the in-group sort. No registered row reads it;
+    tests/test_apriori.py checks the replay against a DuckDB oracle."""
     return (
         lineitem.select("l_orderkey", "l_linenumber", "l_partkey")
         .join(F.broadcast(part.select("p_partkey", "p_brand")),

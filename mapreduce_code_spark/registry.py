@@ -2,7 +2,11 @@
 
 Every implemented operator from SURVEY.md §2 registers here as a
 ``(name, spark_fn, oracle_sql)`` triple. ``__spark_entry__.py`` re-exports
-``queries()`` / ``oracle_sql()`` from this module.
+``queries()`` / ``oracle_sql()`` from this module. This is the ONE query
+table: every query a caller can reach by name is in ``queries()``. Kernel
+modes that no row drives (the canonical association rules, order-
+sensitive Apriori, a pruning support threshold) are exercised by direct
+kernel calls in the tests, not by hidden registrations.
 
 Oracle SQL runs in DuckDB over the same parquet (views: region nation
 customer supplier part orders lineitem events documents embeddings).
@@ -28,30 +32,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
-
-# Retired from the driver-visible surface — the rotation budget is ~50
-# rows/round and the registry must fit the 2-round coverage ceiling, so
-# near-twin variants whose kernel earns a driver row through another
-# registered query get retired instead of crowding the rotation:
-# round 4 retired the pure-batch twins of writeStream queries; round 6
-# retired the apriori support/ordered/canonical-rules variants, the
-# propagation components variant, the batch z-score twin, and the
-# rows-only int8 top-k (r5 verdict #2); round 7 retired the rows-only
-# LSH top-k (IVF is the designated ANN scale path and the LSH bucket
-# join is exercised by the MinHash dedup family), freeing the budget
-# row for the oracled pipeline_epoch_manifest; round 8 retired the
-# batch twins events_attribution_last_touch and relational_hll_distinct
-# (their registered STREAMED twins share the byte-identical oracles)
-# plus the rows-only similarity_topk_ivf (replaced by the ORACLED
-# pinned-centroid variant), freeing rows for the r8 registrations;
-# round 9 retired pipeline_epoch_manifest (the epoch-flip DESCRIPTION
-# row) in favor of pipeline_materialize_epoch, which proves the same
-# flip through physically rewritten bytes under the same oracle.
-# Oracled retirees stay pinned by
-# test_plan_shapes.test_retired_twins_still_match_their_oracles; all
-# stay callable for plan audits and tests.
-_RETIRED: dict[str, QueryFn] = {}
-_RETIRED_ORACLES: dict[str, str] = {}
 
 
 def register(name: str, oracle: str | None = None):
@@ -79,28 +59,12 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-def retired(name: str, oracle: str | None = None):
-    """Like :func:`register` but the query lands in ``_RETIRED`` instead
-    of the driver-visible surface — same wrapper (so a direct call
-    behaves identically), no budget cost."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        register(name, oracle)(fn)
-        _RETIRED[name] = _QUERIES.pop(name)
-        if name in _ORACLES:
-            _RETIRED_ORACLES[name] = _ORACLES.pop(name)
-        return _RETIRED[name]
-
-    return deco
-
-
 # The driver verifies queries in the order this dict yields them and
 # has a finite per-round budget (~50 rows). Ordering is therefore part
 # of the contract; the ordering rule, the budget arithmetic, and the
-# per-round _FIRST/_LAST lists live in ``rotation.py`` (r15 verdict #7:
-# the lists churn every round and were swamping this kernel-bearing
-# file's diff). Re-exported under the historical names the rotation
-# tests pin.
+# per-round _FIRST/_LAST lists live in ``rotation.py``, a module with no
+# kernels, so reordering never touches this file. Re-exported under the
+# names the rotation tests pin.
 _FIRST = ROUND_FIRST
 _LAST = ROUND_LAST
 
@@ -121,12 +85,11 @@ def oracle_sql() -> dict[str, str]:
 
 
 # Per-(kind, session, sf_dir) persisted materializations shared across
-# registered queries. Two uses: the Apriori transactions prep (the
-# reference's own cross-job HBase cache, done Spark-style with persist())
-# and the near-dup pairs frame shared by dedup_components and
-# dedup_components_starcontract (round-3 verdict #4: rebuilding the full
-# shingles→LSH→rerank pipeline for each components variant doubled the
-# sweep cost for identical input).
+# registered queries, e.g. the Apriori transactions prep (the reference's
+# own cross-job HBase cache, done Spark-style with persist()) and the
+# near-dup pairs frame that dedup_near_dup_scalable and
+# dedup_components_starcontract read: identical input is materialized
+# once per session, never once per consumer.
 _DF_CACHE: dict[tuple[str, int, str], DataFrame] = {}
 
 
@@ -250,86 +213,6 @@ def q_frequent_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-HIGH_SUPPORT = 300  # prunes ~half the pairs and most triples at sf0.01 —
-# exercises the support HAVING non-vacuously (at SUPPORT=5 nothing is cut)
-
-
-@retired("apriori_frequent_itemsets_s300", oracle=_itemsets_oracle(HIGH_SUPPORT))
-def q_frequent_itemsets_high(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apriori with a support threshold that actually prunes (P2/P3).
-
-    Retired round 6 (budget): same kernel as apriori_frequent_itemsets
-    with a different support constant — the threshold behavior stays
-    pinned by this oracle in test_plan_shapes and by the raw/final-mode
-    tests in tests/test_frequent.py."""
-    return frequent.frequent_itemsets(
-        _transactions(spark, sf_dir),
-        frequent.AprioriConfig(support=HIGH_SUPPORT),
-    )
-
-
-# Faithful reference-replay oracle: itemset identity follows the basket's
-# ENCOUNTER order (apriori_final.java:82-93 — "b a" != "a b"), not the
-# canonical sorted-set identity. Baskets order items by first l_linenumber
-# (unique within an order), first occurrence wins on duplicate brands;
-# subset enumeration then respects in-basket position (a.pos < b.pos)
-# instead of lexicographic item order.
-_ORDERED_ITEMSETS_ORACLE = f"""
-WITH tok AS (
-  SELECT l_orderkey AS basket_id, p_brand AS item,
-         min(l_linenumber) AS first_ln
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  GROUP BY 1, 2
-),
-freq AS (SELECT item FROM tok GROUP BY item HAVING count(*) >= {SUPPORT}),
-pos AS (
-  -- order by (first_ln, item): the driver's synthetic lineitem REUSES
-  -- l_linenumber within an order, and Spark's array_sort over
-  -- struct(l_linenumber, p_brand) breaks those ties by brand
-  SELECT basket_id, item,
-         row_number() OVER (PARTITION BY basket_id
-                            ORDER BY first_ln, item) AS pos
-  FROM tok WHERE item IN (SELECT item FROM freq)
-),
-singles AS (SELECT item AS itemset, count(*) AS cnt FROM pos GROUP BY 1),
-pairs AS (
-  SELECT a.item || ' ' || b.item AS itemset, count(*) AS cnt
-  FROM pos a JOIN pos b ON a.basket_id = b.basket_id AND a.pos < b.pos
-  GROUP BY 1
-),
-triples AS (
-  SELECT a.item || ' ' || b.item || ' ' || c.item AS itemset, count(*) AS cnt
-  FROM pos a
-  JOIN pos b ON a.basket_id = b.basket_id AND a.pos < b.pos
-  JOIN pos c ON b.basket_id = c.basket_id AND b.pos < c.pos
-  GROUP BY 1
-)
-SELECT itemset, cnt
-FROM (SELECT * FROM singles UNION ALL SELECT * FROM pairs
-      UNION ALL SELECT * FROM triples)
-WHERE cnt >= {SUPPORT}
-"""
-
-
-@retired("apriori_frequent_itemsets_ordered", oracle=_ORDERED_ITEMSETS_ORACLE)
-def q_frequent_itemsets_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apriori in faithful reference-replay mode: encounter-order baskets
-    (``prep.transactions_ordered``) + order-sensitive itemset identity
-    (``AprioriConfig(ordered_identity=True)``) — the reference's
-    transaction-order-sensitive keys (``apriori_final.java:82-93``)
-    reproduced end to end (round-3 verdict task 6).
-
-    Retired round 6 (budget): a behavioral-flag variant of the same
-    kernel; the order-sensitive identity stays pinned by this oracle in
-    test_plan_shapes and the ordered-mode unit tests."""
-    tx = prep.transactions_ordered(
-        load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "part")
-    )
-    return frequent.frequent_itemsets(
-        tx, frequent.AprioriConfig(support=SUPPORT, ordered_identity=True)
-    )
-
-
 # Shared CTE prefix for rule oracles: itemset counts as columns (i1<i2<i3),
 # with support HAVING — the DuckDB twin of operators.frequent at max_size=3.
 _SQL_ITEMSET_CTES = f"""
@@ -348,52 +231,6 @@ triples2 AS (
   JOIN ftok c ON b.basket_id = c.basket_id AND b.item < c.item
   GROUP BY 1, 2, 3 HAVING count(*) >= {SUPPORT})
 """
-
-
-@retired(
-    # Retired round 6 (r5 verdict #2): near-twin of
-    # apriori_association_rules_ref (the faithful reference-replay one,
-    # which keeps the driver row); canonical A=>B semantics stay pinned
-    # by this oracle in test_plan_shapes + tests/test_rules.py.
-    "apriori_association_rules",
-    oracle=_SQL_ITEMSET_CTES
-    + """
-SELECT antecedent, consequent, itemset, sub_cnt, full_cnt,
-       100.0 * full_cnt / sub_cnt AS confidence
-FROM (
-  SELECT p.i1 AS antecedent, p.i2 AS consequent,
-         p.i1 || ' ' || p.i2 AS itemset, s.cnt AS sub_cnt, p.cnt AS full_cnt
-  FROM pairs2 p JOIN singles s ON s.item = p.i1
-  UNION ALL
-  SELECT p.i2, p.i1, p.i1 || ' ' || p.i2, s.cnt, p.cnt
-  FROM pairs2 p JOIN singles s ON s.item = p.i2
-  UNION ALL
-  SELECT t.i1, t.i2 || ' ' || t.i3, t.i1 || ' ' || t.i2 || ' ' || t.i3, s.cnt, t.cnt
-  FROM triples2 t JOIN singles s ON s.item = t.i1
-  UNION ALL
-  SELECT t.i2, t.i1 || ' ' || t.i3, t.i1 || ' ' || t.i2 || ' ' || t.i3, s.cnt, t.cnt
-  FROM triples2 t JOIN singles s ON s.item = t.i2
-  UNION ALL
-  SELECT t.i3, t.i1 || ' ' || t.i2, t.i1 || ' ' || t.i2 || ' ' || t.i3, s.cnt, t.cnt
-  FROM triples2 t JOIN singles s ON s.item = t.i3
-  UNION ALL
-  SELECT t.i1 || ' ' || t.i2, t.i3, t.i1 || ' ' || t.i2 || ' ' || t.i3, q.cnt, t.cnt
-  FROM triples2 t JOIN pairs2 q ON q.i1 = t.i1 AND q.i2 = t.i2
-  UNION ALL
-  SELECT t.i1 || ' ' || t.i3, t.i2, t.i1 || ' ' || t.i2 || ' ' || t.i3, q.cnt, t.cnt
-  FROM triples2 t JOIN pairs2 q ON q.i1 = t.i1 AND q.i2 = t.i3
-  UNION ALL
-  SELECT t.i2 || ' ' || t.i3, t.i1, t.i1 || ' ' || t.i2 || ' ' || t.i3, q.cnt, t.cnt
-  FROM triples2 t JOIN pairs2 q ON q.i1 = t.i2 AND q.i2 = t.i3
-)
-""",
-)
-def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apriori job 3, canonical A=>B semantics (SURVEY §2: T3, J3, F6)."""
-    counts = frequent.frequent_itemsets(
-        _transactions(spark, sf_dir), frequent.AprioriConfig(support=SUPPORT)
-    )
-    return rules.association_rules(counts, SUPPORT)
 
 
 @register(
@@ -636,11 +473,10 @@ def q_streamed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalable near-dup pairs, persisted per (session, sf_dir): both
-    components variants consume the IDENTICAL pair set, so the full
-    shingles→LSH→rerank pipeline materializes once, not once per
-    variant (round-3 verdict #4 — together the two rebuilds were ~15 s
-    of the sweep)."""
+    """Scalable near-dup pairs, persisted per (session, sf_dir): the
+    pairs row and the components row consume the IDENTICAL pair set,
+    so the full shingles→LSH→rerank pipeline materializes once, not
+    once per consumer."""
     return _cached_df(
         "near_dup_pairs",
         spark,
@@ -651,25 +487,14 @@ def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@retired("dedup_components", oracle=dedup.dup_components_sql())
-def q_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the scalable near-dup pairs: one keeper
-    per transitive dup CLUSTER (min-label propagation; oracle = DuckDB
-    recursive reachability) — the step that turns pair lists into an
-    actionable dedup decision.
-
-    Retired round 6 (r5 verdict #2): same contract as
-    dedup_components_starcontract (which keeps the driver row — the
-    O(log cluster-size) variant is the designated 100 TB path); the
-    propagation variant stays oracle-pinned in test_plan_shapes."""
-    return dedup.dup_components(_near_dup_pairs(spark, sf_dir))
-
-
 @register("dedup_components_starcontract", oracle=dedup.dup_components_sql())
 def q_dup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same components contract via large-star/small-star contraction:
-    O(log n) rounds in cluster SIZE (not eccentricity), the variant a
-    100 TB corpus with one giant chain-shaped cluster needs."""
+    """Connected components over the scalable near-dup pairs: one keeper
+    per transitive dup CLUSTER (oracle = DuckDB recursive reachability),
+    the step that turns pair lists into an actionable dedup decision.
+    Large-star/small-star contraction: O(log n) rounds in cluster SIZE
+    (not eccentricity), which a 100 TB corpus with one giant
+    chain-shaped cluster needs."""
     return dedup.dup_components_star(_near_dup_pairs(spark, sf_dir))
 
 
@@ -698,22 +523,6 @@ def q_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@retired("similarity_topk_ivf")  # approximate ANN — rows-only check
-def q_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN top-k (k-means coarse quantizer + nprobe cell search +
-    exact re-rank); recall vs brute force asserted in tests.
-
-    Retired round 8 (r7 verdict #4, the LSH/int8 precedent in reverse:
-    an ORACLED row replaces the rows-only one): with the coarse
-    quantizer PINNED, the entire serving path — assignment, probe,
-    re-rank — is exact algebra, so similarity_topk_ivf_pinned carries a
-    full DuckDB hash oracle where this row could only count rows. The
-    genuinely iterative half (Lloyd training, the one thing a fixed
-    quantizer can't cover) stays pinned by the recall/degradation tests
-    (test_llmops.py: full-probe ≡ brute force, sample-trained ≡ exact)."""
-    return similarity.ivf_topk(load_table(spark, sf_dir, "embeddings"))
-
-
 @register(
     "similarity_topk_ivf_pinned", oracle=similarity.ivf_topk_pinned_sql()
 )
@@ -731,40 +540,11 @@ def q_topk_ivf_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@retired("similarity_topk_lsh")  # approximate ANN — rows-only check
-def q_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed ANN top-k (random-hyperplane candidates + exact
-    re-rank); recall vs brute force asserted in tests.
-
-    Retired round 7 (int8 precedent, r5 verdict #2 rationale): of the
-    two approximate-ANN variants, IVF is the designated scale path
-    (probe-bounded candidate scan) and the LSH bucket-join plan shape
-    is independently exercised by the MinHash-LSH dedup family — so
-    this rows-only row added no hash signal beyond the recall/property
-    tests that keep pinning the kernel (test_similarity.py) and the
-    WindowGroupLimit plan pin (test_plan_shapes.py, which resolves
-    retired names too). The freed budget row goes to the ORACLED
-    pipeline_epoch_manifest."""
-    return similarity.topk_cosine_lsh(load_table(spark, sf_dir, "embeddings"))
-
-
 @register("similarity_quantize_int8", oracle=similarity.quantize_int8_sql())
 def q_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric per-vector int8 quantization of the embedding column
     (long form) — the 4x storage/bandwidth scale path for ANN."""
     return similarity.quantize_int8(load_table(spark, sf_dir, "embeddings"))
-
-
-@retired("similarity_topk_int8")  # approximate (quantized) — rows-only
-def q_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k over int8-quantized vectors (scales
-    cancel in the cosine); recall vs exact asserted in tests.
-
-    Retired round 6 (r5 verdict #2): a rows-only driver row adds no
-    hash signal beyond the recall/property tests that already pin this
-    kernel (test_similarity.py); the quantizer itself keeps its oracled
-    row via similarity_quantize_int8."""
-    return similarity.topk_cosine_int8(load_table(spark, sf_dir, "embeddings"))
 
 
 @register("similarity_label_centroids", oracle=similarity.label_centroids_sql())
@@ -1164,44 +944,13 @@ def _epoch_shards_src(spark: SparkSession, sf_dir: str) -> str:
     return out
 
 
-@retired(
-    "pipeline_epoch_manifest",
-    oracle=PIPE.training_manifest_sql(salt=EPOCH_SALT),
-)
-def q_epoch_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The epoch-N reload order from the WRITTEN epoch-0 shards (round-7
-    registration of plans/pipeline.epoch_manifest): read the materialized
-    training set back and re-rank it at a new salt — one scan of the
-    already-curated chunks plus the one shard-keyed rank exchange,
-    instead of the full curation pass an epoch flip would otherwise
-    cost (measured 41.6x cheaper at 100x corpus, SURVEY §9). The oracle
-    recomputes the manifest FROM THE RAW DOCUMENTS at the new salt, so
-    a hash match pins both halves at once: the written shards faithfully
-    hold exactly the surviving chunks, and the flip algebra equals the
-    from-scratch permutation. (EPOCH_SALT != TRAIN_SALT is enforced at
-    import, where EPOCH_SALT is defined.)
-
-    RETIRED round 9 (r8 verdict #5): funds pipeline_materialize_epoch,
-    which proves the SAME flip through physically rewritten bytes (the
-    strictly stronger row — this query describes the flip; that one
-    executes it and audits the written layout). The description row's
-    oracle parity stays pinned here via _RETIRED_ORACLES, and the
-    epoch_manifest kernel itself stays test-pinned
-    (test_scale_patterns.py's epoch-manifest ≡ training-manifest and
-    manifest≡written-bytes tests)."""
-    return PIPE.epoch_manifest(
-        spark, _epoch_shards_src(spark, sf_dir), salt=EPOCH_SALT
-    )
-
-
 @register(
     "pipeline_materialize_epoch",
     oracle=PIPE.training_manifest_sql(salt=EPOCH_SALT),
 )
 def q_materialize_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The epoch flip closed to BYTES and audited from the bytes (round-9
-    registration, r8 verdict #5, replacing the retired description-row
-    pipeline_epoch_manifest): physically rewrite the epoch-0 shards as
+    """The epoch flip closed to BYTES and audited from the bytes:
+    physically rewrite the epoch-0 shards as
     the EPOCH_SALT epoch through plans/pipeline.materialize_epoch (the
     same write_shuffled path epoch 0 used), then read the manifest back
     OFF THE WRITTEN LAYOUT — shard from the hive partition column, pos
@@ -1214,9 +963,9 @@ def q_materialize_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operations under test — run fresh every call."""
     from mapreduce_code_spark.scratch import discard, scratch_dir
 
-    # scratch_dir + discard instead of a raw mkdtemp (r16 verdict #6):
-    # the epoch-1 rewrite — the timed operation under test — commits
-    # its shard files to tmpfs, not the contended root disk
+    # scratch_dir + discard, not a raw mkdtemp: the epoch-1 rewrite —
+    # the timed operation under test — commits its shard files to tmpfs,
+    # not the contended root disk, and leaves nothing behind
     work = scratch_dir("spark_graft_epoch1_")
     try:
         out1 = f"{work}/epoch1"
@@ -1278,13 +1027,6 @@ def q_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id — stable across runs, engines, layouts, and data growth
     (randomSplit is none of those)."""
     return SMP.train_val_split(load_table(spark, sf_dir, "documents"))
-
-
-@retired("sampling_stratified_lang", oracle=SMP.stratified_sample_sql())
-def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-language stratified sample (downsample dominant
-    strata, keep rare ones) — the multilingual-mix rebalancing op."""
-    return SMP.stratified_sample(load_table(spark, sf_dir, "documents"))
 
 
 @register("sampling_streamed_stratified", oracle=SMP.stratified_sample_sql())
@@ -1440,9 +1182,9 @@ def q_streamed_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct (flag, orderkey) state via idempotent anti-join appends
     (foreachBatch + checkpoint), and the register finalize runs over the
     state — register-max is associative, so the estimate equals the
-    batch twin's bit-for-bit under ANY batching. The
-    mergeable-sketch-over-a-stream story, same oracle as the batch
-    query."""
+    batch sketch (``R.hll_distinct_orders_portable``) bit-for-bit under
+    ANY batching. The mergeable-sketch-over-a-stream story, under the
+    batch sketch's oracle."""
     from mapreduce_code_spark.scratch import scratch_dir
     from mapreduce_code_spark.sources.io import load_table_stream
     from mapreduce_code_spark.streaming.windows import (
@@ -1515,23 +1257,6 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kv_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-writer-wins upsert (the reference's HBase Put, dataflow-style)."""
     return R.orders_with_price_updates(load_table(spark, sf_dir, "orders"))
-
-
-@retired("relational_hll_distinct", oracle=R.hll_distinct_portable_sql())
-def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL distinct counts via the portable deterministic sketch — the
-    approximate estimate itself is hash-comparable against DuckDB (md5
-    registers + exact integer sum + one shared IEEE division). The native
-    Datasketches variant (hll_distinct_orders) stays test-proven for
-    mergeability/error bounds.
-
-    Retired round 8 (streamed-keeps-the-row precedent, r6 tumbling/
-    session retirements): relational_streamed_hll drives the IDENTICAL
-    sketch through a real foreachBatch writeStream and shares this
-    byte-identical oracle, so the batch twin added no hash signal; its
-    parity stays pinned here via _RETIRED_ORACLES. The freed budget row
-    goes to the r8 registrations (r7 verdict #2)."""
-    return R.hll_distinct_orders_portable(load_table(spark, sf_dir, "lineitem"))
 
 
 @register(
@@ -1703,21 +1428,14 @@ def q_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 from mapreduce_code_spark.streaming import windows as W  # noqa: E402
 
 
-@retired("events_tumbling_window", oracle=W.tumbling_counts_sql())
-def q_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type tumbling 1h windows (streaming-capable plan)."""
-    return W.tumbling_counts(load_table(spark, sf_dir, "events"))
-
-
 @register("events_streamed_tumbling", oracle=W.tumbling_counts_sql())
 def q_streamed_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME tumbling aggregation executed through an actual
-    writeStream (file source → stateful agg → memory sink, availableNow
-    trigger) — the streaming execution path itself earns the oracle
-    comparison, not just its batch twin. 4 state partitions (r10 flip,
-    r9 verdict #1): the bounded run's cost is per-partition state-store
-    commits, not data volume — 1.71 → 0.93 s at sf0.1 (r10 A/B,
-    SURVEY §9); production sizes this to keyspace instead."""
+    """The tumbling aggregation (``W.tumbling_counts``) executed through
+    an actual writeStream (file source → stateful agg → memory sink,
+    availableNow trigger), so the streaming execution path itself earns
+    the oracle comparison. 4 state partitions: the bounded run's cost is
+    per-partition state-store commits, not data volume — 1.71 → 0.93 s
+    at sf0.1 (SURVEY §9); production sizes this to keyspace instead."""
     with W.stream_partitions(4):
         return W.streamed_tumbling_counts(spark, sf_dir)
 
@@ -1728,21 +1446,15 @@ def q_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return W.sliding_counts(load_table(spark, sf_dir, "events"))
 
 
-@retired("events_session_window", oracle=W.session_windows_sql())
-def q_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user 30m-gap session windows (native session_window)."""
-    return W.session_windows(load_table(spark, sf_dir, "events"))
-
-
 @register("events_streamed_session", oracle=W.session_windows_sql())
 def q_streamed_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME sessionization executed through an actual writeStream —
-    the session-state MERGE path (sessions collapse across micro-batches
-    when a bridging event arrives) earns the oracle row, not just the
-    batch twin. 8 state partitions (r10 flip): the session merge does
-    real per-key work, so it keeps more parallelism than the
-    commit-dominated tumbling agg — 1.79 → 1.10 s at sf0.1, and 8 beat
-    4 (1.28 s) in the same-session A/B (SURVEY §9)."""
+    """The sessionization (``W.session_windows``) executed through an
+    actual writeStream, so the session-state MERGE path (sessions
+    collapse across micro-batches when a bridging event arrives) earns
+    the oracle row. 8 state partitions: the session merge does real
+    per-key work, so it keeps more parallelism than the commit-dominated
+    tumbling agg — 1.79 → 1.10 s at sf0.1, and 8 beat 4 (1.28 s) in the
+    same-session A/B (SURVEY §9)."""
     with W.stream_partitions(8):
         return W.streamed_session_windows(spark, sf_dir)
 
@@ -1751,7 +1463,7 @@ from mapreduce_code_spark.streaming import joins as SJ  # noqa: E402
 from mapreduce_code_spark.streaming import stateful as ST  # noqa: E402
 
 
-# shared by the batch twin and the actual stream-stream writeStream run
+# the batch view→purchase join, as DuckDB computes it
 _VIEW_PURCHASE_SQL = """
 WITH ev AS (SELECT * REPLACE (date_trunc('microseconds', ts) AS ts) FROM events)
 SELECT v.user_id, v.event_id AS view_id, p.event_id AS purchase_id,
@@ -1761,21 +1473,6 @@ FROM ev v JOIN ev p
  AND v.event_type = 'view' AND p.event_type = 'purchase'
  AND p.ts > v.ts AND p.ts <= v.ts + INTERVAL 600 SECOND
 """
-
-
-@retired(
-    "events_view_purchase_correlation",
-    oracle=_VIEW_PURCHASE_SQL,
-)
-def q_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """View→purchase correlation — batch twin of the watermarked
-    stream-stream join (parity in tests/test_streaming.py)."""
-    ev = load_table(spark, sf_dir, "events")
-    return SJ.view_then_purchase(
-        ev.filter(ev.event_type == "view"),
-        ev.filter(ev.event_type == "purchase"),
-        watermark=None,
-    )
 
 
 @register(
@@ -1873,19 +1570,6 @@ def q_triangle_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
 from mapreduce_code_spark.operators import monitoring as MON  # noqa: E402
 
 
-@retired("events_anomaly_zscore", oracle=MON.anomaly_zscore_sql())
-def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3σ value outliers per event type — exact integer (n, Σv, Σv²) in
-    cent-quantized space, broadcast-joined back (fact never shuffles).
-
-    Retired round 6 (budget, same move as the four r5 retirements):
-    pure-batch twin of events_streamed_anomaly, which runs the SAME
-    scorer kernel through a real writeStream against the SAME oracle
-    and keeps the driver row; the batch twin stays oracle-pinned in
-    test_plan_shapes."""
-    return MON.anomaly_zscore(load_table(spark, sf_dir, "events"))
-
-
 @register("events_streamed_anomaly", oracle=MON.anomaly_zscore_sql())
 def q_streamed_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The z-score scorer driven through an ACTUAL writeStream as a
@@ -1944,20 +1628,6 @@ def q_winsorized_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust aggregation: winsorized mean order value per priority
     (exact integer rank bounds + clamped decimal sum, rtol=0)."""
     return R.winsorized_price_stats(load_table(spark, sf_dir, "orders"))
-
-
-@retired("events_attribution_last_touch", oracle=MON.attribution_last_touch_sql())
-def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Last-touch purchase attribution within a 30-minute window —
-    single per-user ordered pass, integer-micros gap test, exact cents.
-
-    Retired round 8 (streamed-keeps-the-row precedent, r6 tumbling/
-    session retirements): events_streamed_attribution drives the same
-    attribution semantics through a real stateful writeStream and
-    shares this byte-identical oracle, so the batch twin added no hash
-    signal; its parity stays pinned here via _RETIRED_ORACLES. The
-    freed budget row goes to the r8 registrations (r7 verdict #2)."""
-    return MON.attribution_last_touch(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -2086,8 +1756,8 @@ SHARED_BUILDS: dict[str, tuple[str, Callable, frozenset[str]]] = {
     ),
     # the shingles→LSH→rerank pairs frame: dedup_near_dup_scalable IS
     # that computation (CacheManager substitutes the cached plan into
-    # its fresh build), so it owns the build; the components variants
-    # consume it warm
+    # its fresh build), so it owns the build; the components row
+    # consumes it warm
     "near_dup_pairs": (
         "dedup_near_dup_scalable",
         _near_dup_pairs,

@@ -1,30 +1,26 @@
 """Per-round rotation state for the driver-visible query ordering.
 
-Split out of ``registry.py`` (r15 verdict #7): the rotation lists churn
-every round — a pure reorder was 115 lines of ``registry.py`` diff in
-r15 — so they live here, in a module that carries NO kernels, and the
-kernel-bearing registry stays diff-quiet across rounds. ``registry``
-imports ``ROUND_FIRST``/``ROUND_LAST`` and re-exports them as its
+The rotation lists churn every round, so they live here, in a module
+that carries NO kernels, and the kernel-bearing registry stays
+diff-quiet across rounds. ``registry`` imports
+``ROUND_FIRST``/``ROUND_LAST`` and re-exports them as its
 ``_FIRST``/``_LAST`` (the names the rotation tests pin).
 
-THE ORDERING CONTRACT (moved verbatim from registry.py, r8 verdict
-#1/#7): the driver verifies queries in the order ``queries()`` yields
-them and has a finite per-round budget (~50 rows). So ordering is part
-of the contract, and the rule is: a query goes FIRST if it is (a) new
-this round, (b) its code was touched this round, or (c) its latest
-driver row is one round old (rotation: nothing sits unchecked two
-rounds in a row). With the fifteen retirees (see ``registry._RETIRED``)
-the 98-query surface sits under the 2-round coverage ceiling — the
-round-8 budget decision (SURVEY §8): additions beyond 100 queries
-require a retirement, and near-twin retirement (streamed keeps the
-row; oracled replaces rows-only) is the standing policy for funding
-them.
+THE ORDERING CONTRACT: the driver verifies queries in the order
+``queries()`` yields them and has a finite per-round budget (~50 rows).
+So ordering is part of the contract, and the rule is: a query goes
+FIRST if it is (a) new this round, (b) its code was touched this round,
+or (c) its latest driver row is one round old (rotation: nothing sits
+unchecked two rounds in a row). The 98-query surface sits under the
+2-round coverage ceiling of 100 (SURVEY §8), so an addition beyond it
+must be funded by deleting a registered query, and a kernel mode that
+no row drives is checked by a direct kernel call in the tests instead.
 
 BUDGET ARITHMETIC (the test's definition, not an estimate): with 98
 registered and a 50-row sweep, the previous round covers 50, leaving
 48 stale; so structural slack is EXACTLY 50 - 48 = 2 rows per round
-for (new + touched + swaps). Each addition must be funded by a
-retirement AND still fit that slack; a breach cannot ship quietly —
+for (new + touched + swaps). Each addition must be funded by deleting
+a registered query AND still fit that slack; a breach cannot ship quietly —
 tests/test_registry_rotation.py::test_next_round_must_check_fits_budget
 fails at build time if the stale+new set exceeds 50.
 """
@@ -55,8 +51,8 @@ ROUND_FIRST: list[str] = [
     # dedup_streamed_incremental owns corpus_shingles.
     "regression_sgd_linear",
     "regression_sgd_logistic",
-    "similarity_hybrid_rrf",  # r18 kernel touch (stale anyway): leg +
-    # fusion exchange fusion, 11 -> 5 net shuffles (plans/r18)
+    "similarity_hybrid_rrf",  # kernel touched (stale anyway): its plan
+    # must keep 5 net exchanges (tests/test_plan_shapes.py)
     "pipeline_ingest_manifest",  # re-certifies the r18-touched shared
     # streamed-ingest run (threaded staging writes) end to end
     "pipeline_materialize_manifest",
@@ -107,6 +103,6 @@ ROUND_FIRST: list[str] = [
     "relational_returned_orders",
 ]
 ROUND_LAST: list[str] = [
-    # (empty this round: the four batch twins that used to be the
-    # designated budget cut are retired from the surface entirely)
+    # queries the driver may skip this round when the budget runs out
+    # (empty: every registered row is due or cheap enough to keep)
 ]

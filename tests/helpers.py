@@ -82,6 +82,18 @@ EVENTS_SCHEMA_STR = (
 )
 
 
+def sf_transactions(spark, sf_dir: str, ordered: bool = False):
+    """The Apriori baskets of an sf corpus, built directly (no registry
+    cache): sorted items, or encounter order with ``ordered``."""
+    from mapreduce_code_spark.plans import prep
+    from mapreduce_code_spark.sources.io import load_table
+
+    build = prep.transactions_ordered if ordered else prep.transactions
+    return build(
+        load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "part")
+    )
+
+
 def event_row(eid, uid, typ, minutes, k, value=10.0):
     """Synthetic events-table row builder shared by the attribution
     tests; ``k=None`` plants a null-page props payload."""

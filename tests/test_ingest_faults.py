@@ -24,7 +24,9 @@ and asserts the recovery behavior end-to-end:
 4. a TRUNCATED ledger part-file (corrupt parquet under a surviving dir
    name — the one state name/data-file coverage cannot see) — the
    resume must fail LOUDLY at the history scan instead of silently
-   re-admitting previously-seen documents.
+   re-admitting previously-seen documents;
+5. a batch AND its concurrent hash-log fold both failing — both
+   exceptions must reach the caller, chained.
 
 Reference provenance: the reference has no restartable ingest (each
 Hadoop job is one-shot, `apriori_raw.java:491-601` re-reads everything);
@@ -559,3 +561,46 @@ def test_two_concurrent_resumes_of_one_pair_refuse_loudly(
     assert not errors, f"run 1 failed: {errors}"
     assert _committed(ckpt) == [0, 1]
     assert _shard_contents(out) == ref
+
+
+def test_batch_and_fold_failures_both_reach_the_caller(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A micro-batch fails while its concurrent hash-log fold fails too:
+    the fold's exception propagates with the batch's own as its explicit
+    ``__cause__``, so neither failure is lost. Drives the real per-batch
+    handler, captured from ingest_training_set, so the exception objects
+    themselves are inspected rather than the stream's stringified
+    error."""
+    from mapreduce_code_spark.streaming import windows
+
+    handlers = []
+    monkeypatch.setattr(
+        windows,
+        "_drive_foreach_batch",
+        lambda stream, handle, ckpt: handlers.append(handle),
+    )
+
+    def batch_fails(batch, batch_id, *args):
+        raise RuntimeError("injected-batch-failure")
+
+    def fold_fails(*args):
+        raise OSError("injected-fold-failure")
+
+    monkeypatch.setattr(pl, "_ingest_batch", batch_fails)
+    monkeypatch.setattr(pl, "compact_hash_log", fold_fails)
+    src, schema, _, _ = _split_source(spark, sf_dir, tmp_path)
+    pl.ingest_training_set(
+        _stream(spark, schema, src),
+        str(tmp_path / "out"),
+        str(tmp_path / "staging"),
+        str(tmp_path / "ckpt"),
+        compact_every=1,
+    )
+    (handle,) = handlers
+    with pytest.raises(OSError, match="injected-fold-failure") as info:
+        handle(None, 1)  # batch 1 folds batch 0's hash log
+    cause = info.value.__cause__
+    assert isinstance(cause, RuntimeError), info.value.__cause__
+    assert "injected-batch-failure" in str(cause)
+

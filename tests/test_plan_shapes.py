@@ -1,5 +1,6 @@
-"""Automated plan-shape audit: every registered query's physical plan is
-checked for scale anti-patterns.
+"""Automated plan-shape audit: every registered query's physical plan —
+plus the batch plan of each kept kernel no row returns (KERNEL_BUILDS) —
+is checked for scale anti-patterns.
 
 - ``CartesianProduct`` — an unbroadcast cross join means a shuffle-side
   blowup that cannot survive scale.
@@ -16,22 +17,94 @@ from __future__ import annotations
 
 import pytest
 
-from mapreduce_code_spark.registry import _RETIRED, queries
+from mapreduce_code_spark.registry import queries
+from mapreduce_code_spark.sources.io import load_table
 
 FORBIDDEN = ("CartesianProduct", "BatchEvalPython")
 
 
+def _apriori_counts(spark, sf_dir, support=5, ordered=False):
+    from mapreduce_code_spark.operators.frequent import (
+        AprioriConfig,
+        frequent_itemsets,
+    )
+    from tests.helpers import sf_transactions
+
+    return frequent_itemsets(
+        sf_transactions(spark, sf_dir, ordered),
+        AprioriConfig(support=support, ordered_identity=ordered),
+    )
+
+
+def _events(spark, sf_dir):
+    return load_table(spark, sf_dir, "events")
+
+
+def _view_purchase(spark, sf_dir):
+    from mapreduce_code_spark.streaming import joins as SJ
+
+    ev = _events(spark, sf_dir)
+    return SJ.view_then_purchase(
+        ev.filter(ev.event_type == "view"),
+        ev.filter(ev.event_type == "purchase"),
+        watermark=None,
+    )
+
+
+def _kernel_builds():
+    """Batch plans of kept kernels that no registered row returns: the
+    rows run them inside a stream (whose returned plan is a sink scan
+    the audits cannot see into) or not at all (kernel modes checked
+    against DuckDB in test_apriori/test_rules). Each is a direct kernel
+    call, keyed by a descriptive name that no registered row uses."""
+    from mapreduce_code_spark import registry
+    from mapreduce_code_spark.operators import monitoring as MON
+    from mapreduce_code_spark.operators import relational as R
+    from mapreduce_code_spark.operators import rules
+    from mapreduce_code_spark.operators import sampling as SMP
+    from mapreduce_code_spark.plans import pipeline as PIPE
+    from mapreduce_code_spark.streaming import windows as W
+
+    return {
+        "apriori_association_rules": lambda s, d: rules.association_rules(
+            _apriori_counts(s, d), 5
+        ),
+        "apriori_frequent_itemsets_ordered": lambda s, d: _apriori_counts(
+            s, d, ordered=True
+        ),
+        "apriori_frequent_itemsets_s300": lambda s, d: _apriori_counts(
+            s, d, support=300
+        ),
+        "events_anomaly_zscore": lambda s, d: MON.anomaly_zscore(_events(s, d)),
+        "events_attribution_last_touch": lambda s, d: (
+            MON.attribution_last_touch(_events(s, d))
+        ),
+        "events_session_window": lambda s, d: W.session_windows(_events(s, d)),
+        "events_tumbling_window": lambda s, d: W.tumbling_counts(_events(s, d)),
+        "events_view_purchase_correlation": _view_purchase,
+        "pipeline_epoch_manifest": lambda s, d: PIPE.epoch_manifest(
+            s, registry._epoch_shards_src(s, d), salt=registry.EPOCH_SALT
+        ),
+        "relational_hll_distinct": lambda s, d: (
+            R.hll_distinct_orders_portable(load_table(s, d, "lineitem"))
+        ),
+        "sampling_stratified_lang": lambda s, d: SMP.stratified_sample(
+            load_table(s, d, "documents")
+        ),
+    }
+
+
+KERNEL_BUILDS = _kernel_builds()
+ALL_NAMES = sorted(set(queries()) | set(KERNEL_BUILDS))
+
+
 def _query(name):
-    """Resolve a query by name from the driver-visible surface or the
-    retired set — retirement (a driver-budget decision) must not lose
-    the plan pins below."""
-    return queries().get(name) or _RETIRED[name]
+    """A registered query, or a direct kernel build from KERNEL_BUILDS."""
+    return queries().get(name) or KERNEL_BUILDS[name]
 
 
-# Both audits cover the retired batch twins too — their batch plans
-# differ from the streamed twins' and must not rot just because the
-# driver budget no longer pays for them.
-ALL_NAMES = sorted(set(queries()) | set(_RETIRED))
+def test_kernel_builds_shadow_no_registered_row():
+    assert not set(KERNEL_BUILDS) & set(queries())
 
 
 @pytest.mark.parametrize("name", ALL_NAMES)
@@ -49,9 +122,7 @@ def test_no_scale_antipatterns(spark, sf_dir, name):
 TOPK = (
     "relational_topk_parts_per_brand",
     "similarity_topk_cosine",
-    "similarity_topk_ivf",
     "similarity_topk_ivf_pinned",
-    "similarity_topk_lsh",
     "sampling_source_cap",
 )
 
@@ -60,6 +131,26 @@ TOPK = (
 def test_topk_uses_window_group_limit(spark, sf_dir, name):
     plan = _query(name)(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan, f"{name}: rank filter lost WindowGroupLimit"
+
+
+def _net_exchanges(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("Exchange") - plan.count("BroadcastExchange")
+
+
+def test_hybrid_rrf_plans_five_net_exchanges(spark, sf_dir):
+    """Both retrieval legs arrive hash(query_id)-partitioned, so the RRF
+    fusion (a union + per-(query, doc) max) and the final rank window
+    add no exchange: the dense leg plans 2 (spread, top-k window) and
+    the sparse leg 3 (spread, the (q, d, word) dedup, one
+    repartition(query_id) serving both count and rank). A full-outer-
+    join fusion planned 11."""
+    from mapreduce_code_spark.operators import similarity
+
+    docs = load_table(spark, sf_dir, "documents")
+    emb = load_table(spark, sf_dir, "embeddings")
+    assert _net_exchanges(similarity.keyword_ranked(docs)) == 3
+    assert _net_exchanges(similarity.hybrid_rrf(docs, emb)) == 5
 
 
 # Scan-heavy queries with selective predicates: at least one parquet scan
@@ -110,7 +201,6 @@ def test_filters_reach_the_scan(spark, sf_dir, name):
 def test_spread_is_noop_on_well_partitioned_input(spark, sf_dir):
     from mapreduce_code_spark.operators.dedup import shingles
     from mapreduce_code_spark.partitioning import spread
-    from mapreduce_code_spark.sources.io import load_table
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     docs = load_table(spark, sf_dir, "documents")
@@ -163,7 +253,7 @@ def _window_nodes(df):
 
 
 @pytest.mark.parametrize(
-    "name", sorted((set(queries()) | set(_RETIRED)) - set(BOUNDED_GLOBAL_WINDOW_OK))
+    "name", sorted(set(ALL_NAMES) - set(BOUNDED_GLOBAL_WINDOW_OK))
 )
 def test_no_partitionless_unbounded_window(spark, sf_dir, name):
     """A WindowExec with an empty partition spec sorts its ENTIRE input
@@ -235,30 +325,6 @@ def test_plans_md_sentinel_rows_are_fresh(spark):
             f"PLANS.md is stale for {name}:\n committed: {committed[name]}\n"
             f" live:      {row}\nregenerate with tools/plan_report.py"
         )
-
-
-def test_retired_twins_still_match_their_oracles(spark, sf_dir):
-    """Queries retired from the driver surface (registry ``_RETIRED``,
-    r4 verdict #3 + r6/r7 budget retirements) keep their DuckDB oracle
-    parity HERE — retirement is a driver-budget decision, not a
-    correctness waiver. The three oracle-less retirees
-    (similarity_topk_int8, similarity_topk_lsh, and — since r8 —
-    similarity_topk_ivf, approximate by design) are instead pinned by
-    their recall/property tests in test_llmops.py, and the IVF serving
-    path now has the ORACLED similarity_topk_ivf_pinned row."""
-    from mapreduce_code_spark.registry import _RETIRED_ORACLES
-
-    from tests.helpers import assert_parity
-
-    assert set(_RETIRED_ORACLES) <= set(_RETIRED)
-    assert set(_RETIRED) - set(_RETIRED_ORACLES) <= {
-        "similarity_topk_int8",
-        "similarity_topk_lsh",
-        "similarity_topk_ivf",
-    }
-    assert _RETIRED_ORACLES
-    for name, sql in _RETIRED_ORACLES.items():
-        assert_parity(_RETIRED[name](spark, sf_dir), sf_dir, sql)
 
 
 def test_rotation_lists_name_real_queries():

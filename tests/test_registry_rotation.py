@@ -3,8 +3,9 @@ contract): the driver verifies ~50 queries per round in registry order,
 so (a) the surface must fit the 2-round coverage ceiling, (b) any query
 without a row in the two newest CORRECTNESS files must sit inside the
 budget prefix (new/unchecked queries lead), and (c) the _FIRST/_LAST
-ordering lists must actually name registered queries — a typo there
-silently falls out of `queries()`'s ordering instead of erroring."""
+ordering lists and bench.py's per-name query sets must actually name
+registered queries — a typo there silently falls out of `queries()`'s
+ordering (or bench's special-casing) instead of erroring."""
 
 from __future__ import annotations
 
@@ -42,8 +43,8 @@ def test_surface_fits_two_round_budget():
     n = len(registry.queries())
     assert n <= 2 * BUDGET, (
         f"{n} registered queries exceed the {2 * BUDGET} two-round "
-        "coverage ceiling — retire a query (registry.retired) or the "
-        "rotation guarantee breaks"
+        "coverage ceiling — delete a registered query or the rotation "
+        "guarantee breaks"
     )
 
 
@@ -62,7 +63,7 @@ def test_next_round_must_check_fits_budget():
     stale = [n for n in registry.queries() if n not in rows[0]]
     assert len(stale) <= BUDGET, (
         f"{len(stale)} queries lack a row in the newest CORRECTNESS "
-        f"file — the next 50-row sweep cannot cover them all; retire "
+        f"file — the next 50-row sweep cannot cover them all; delete "
         f"a near-twin before registering more (slack this round: "
         f"{BUDGET - len(stale)})"
     )
@@ -109,3 +110,26 @@ def test_shared_build_consumers_name_registered_queries():
         assert not unknown, (
             f"{fixture.__name__}: consumers not registered: {unknown}"
         )
+
+
+def test_bench_query_sets_name_registered_queries():
+    """bench.py special-cases queries by name (SGD iteration counts, the
+    -1 shuffle sentinel for eager and lineage-cut rows) — a stale name
+    there silently special-cases nothing, so every name must be a
+    registered query."""
+    import sys
+
+    sys.path.insert(0, str(ROOT))
+    import bench
+    from mapreduce_code_spark import registry
+
+    reg = set(registry.queries())
+    for label, names in (
+        ("SGD_LINKS", set(bench.SGD_LINKS)),
+        ("EAGER_STREAMS", bench.EAGER_STREAMS),
+        ("EAGER_LOOPS", bench.EAGER_LOOPS),
+        ("EAGER_WRITES", bench.EAGER_WRITES),
+        ("LINEAGE_CUT", bench.LINEAGE_CUT),
+    ):
+        unknown = sorted(names - reg)
+        assert not unknown, f"bench.{label} names unregistered: {unknown}"

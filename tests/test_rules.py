@@ -1,12 +1,56 @@
 """Association-rule tests: micro-fixture goldens for both enumeration
-modes, confidence bounds property, and DuckDB oracle parity."""
+modes, confidence bounds property, and DuckDB oracle parity — for the
+registered faithful row and for the canonical mode no row runs."""
 
 from __future__ import annotations
 
 import pytest
 
+from mapreduce_code_spark.operators.frequent import (
+    AprioriConfig,
+    frequent_itemsets,
+)
 from mapreduce_code_spark.operators.rules import association_rules
-from mapreduce_code_spark.registry import oracle_sql, queries
+from mapreduce_code_spark.registry import (
+    SUPPORT,
+    _SQL_ITEMSET_CTES,
+    oracle_sql,
+    queries,
+)
+from tests.helpers import assert_parity, sf_transactions
+
+# Canonical A=>B rules over itemsets up to size 3: every proper non-empty
+# antecedent of each frequent pair and triple.
+CANONICAL_RULES_ORACLE = _SQL_ITEMSET_CTES + """
+SELECT antecedent, consequent, itemset, sub_cnt, full_cnt,
+       100.0 * full_cnt / sub_cnt AS confidence
+FROM (
+  SELECT p.i1 AS antecedent, p.i2 AS consequent,
+         p.i1 || ' ' || p.i2 AS itemset, s.cnt AS sub_cnt, p.cnt AS full_cnt
+  FROM pairs2 p JOIN singles s ON s.item = p.i1
+  UNION ALL
+  SELECT p.i2, p.i1, p.i1 || ' ' || p.i2, s.cnt, p.cnt
+  FROM pairs2 p JOIN singles s ON s.item = p.i2
+  UNION ALL
+  SELECT t.i1, t.i2 || ' ' || t.i3, t.i1 || ' ' || t.i2 || ' ' || t.i3, s.cnt, t.cnt
+  FROM triples2 t JOIN singles s ON s.item = t.i1
+  UNION ALL
+  SELECT t.i2, t.i1 || ' ' || t.i3, t.i1 || ' ' || t.i2 || ' ' || t.i3, s.cnt, t.cnt
+  FROM triples2 t JOIN singles s ON s.item = t.i2
+  UNION ALL
+  SELECT t.i3, t.i1 || ' ' || t.i2, t.i1 || ' ' || t.i2 || ' ' || t.i3, s.cnt, t.cnt
+  FROM triples2 t JOIN singles s ON s.item = t.i3
+  UNION ALL
+  SELECT t.i1 || ' ' || t.i2, t.i3, t.i1 || ' ' || t.i2 || ' ' || t.i3, q.cnt, t.cnt
+  FROM triples2 t JOIN pairs2 q ON q.i1 = t.i1 AND q.i2 = t.i2
+  UNION ALL
+  SELECT t.i1 || ' ' || t.i3, t.i2, t.i1 || ' ' || t.i2 || ' ' || t.i3, q.cnt, t.cnt
+  FROM triples2 t JOIN pairs2 q ON q.i1 = t.i1 AND q.i2 = t.i3
+  UNION ALL
+  SELECT t.i2 || ' ' || t.i3, t.i1, t.i1 || ' ' || t.i2 || ' ' || t.i3, q.cnt, t.cnt
+  FROM triples2 t JOIN pairs2 q ON q.i1 = t.i2 AND q.i2 = t.i3
+)
+"""
 
 
 @pytest.fixture(scope="module")
@@ -63,16 +107,24 @@ def test_rules_standard_triple_complete(counts_triple):
         assert 0 < r["confidence"] <= 100.0
 
 
+def test_rules_standard_min_antecedent_size(counts_triple):
+    # antecedents are the subsets of size >= 2, consequents their
+    # complements — not the other way round
+    rows = association_rules(counts_triple, 5, min_antecedent_size=2)
+    got = {(r["antecedent"], r["consequent"]) for r in rows.collect()}
+    assert got == {("a b", "c"), ("a c", "b"), ("b c", "a")}
+
+
 @pytest.mark.parametrize(
     "name", ["apriori_association_rules", "apriori_association_rules_ref"]
 )
 def test_oracle_parity(spark, sf_dir, name):
-    # the canonical variant is retired from the driver surface (r6
-    # budget) but keeps full oracle parity here
-    from mapreduce_code_spark.registry import _RETIRED, _RETIRED_ORACLES
-
-    from tests.helpers import assert_parity
-
-    fn = queries().get(name) or _RETIRED[name]
-    sql = oracle_sql().get(name) or _RETIRED_ORACLES[name]
-    assert_parity(fn(spark, sf_dir), sf_dir, sql)
+    if name == "apriori_association_rules":
+        # canonical mode, which no registered row runs: a direct call
+        counts = frequent_itemsets(
+            sf_transactions(spark, sf_dir), AprioriConfig(support=SUPPORT)
+        )
+        got, sql = association_rules(counts, SUPPORT), CANONICAL_RULES_ORACLE
+    else:
+        got, sql = queries()[name](spark, sf_dir), oracle_sql()[name]
+    assert_parity(got, sf_dir, sql)

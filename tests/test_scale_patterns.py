@@ -1166,9 +1166,8 @@ def test_epoch_transfer_plan_oracle_marginals_and_pruned_window(
 
 
 def test_epoch_manifest_registration_cache_and_parity(spark, sf_dir):
-    """The epoch-flip registration pair (round 9: the bytes-row
-    pipeline_materialize_epoch replaced the retired description-row
-    pipeline_epoch_manifest under the SAME oracle): the
+    """The epoch-flip registration (pipeline_materialize_epoch, which
+    rewrites the epoch's bytes and audits them): the
     materialized-shards source is built once per sf_dir and validated
     on hit (the _INGEST_SPLITS pattern — a cleaned dir is rebuilt, not
     trusted), the flip salt genuinely differs from the written epoch's,
