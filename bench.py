@@ -47,7 +47,7 @@ from mapreduce_code_spark.registry import (
     evict_cached,
     queries,
 )
-from mapreduce_code_spark.session import get_spark
+from mapreduce_code_spark.session import get_spark, worker_pyspark
 
 # registered SGD queries -> their sgd_fit link, for the sidecar's
 # iteration-count field (r9 verdict #5)
@@ -205,6 +205,7 @@ def stdout_payloads(
     run_contended: bool,
     sf,
     cpus: int,
+    py_workers: str,
 ) -> tuple[dict, dict]:
     """The two stdout JSON payloads, pure so tests can pin the
     protocol without a Spark run.
@@ -245,6 +246,9 @@ def stdout_payloads(
         "n_queries": len(timings),
         "queries_sidecar": "bench_timings.json",
         "rotation_sidecar": "rotation.json",
+        # which pyspark the Python workers imported ("site-packages" or
+        # "zip", see session.worker_pyspark)
+        "py_workers": py_workers,
     }
     full = dict(short)
     full["queries"] = {n: round(t, 3) for n, t in timings.items()}
@@ -416,6 +420,7 @@ def main() -> int:
     spark.range(0, 4 * n_cpus, 1, 1).repartition(n_cpus).mapInPandas(
         lambda it: it, schema="id long"
     ).write.mode("overwrite").format("noop").save()
+    py_workers = "zip" if ".zip" in worker_pyspark(spark)[0] else "site-packages"
 
     qs = queries()
     only = set(sys.argv[1:])
@@ -629,7 +634,7 @@ def main() -> int:
             json.dumps(rotation_payload(here), indent=1, sort_keys=True)
         )
     full, short = stdout_payloads(
-        timings, merged, regressed, run_contended, sf, cpus
+        timings, merged, regressed, run_contended, sf, cpus, py_workers
     )
     # full line FIRST, short line LAST — see stdout_payloads' docstring
     # for why the order is load-bearing (tail-window parsing)

@@ -14,6 +14,11 @@ Design principles (SURVEY.md §1.2, §4.2):
   hash joins; its HDFS theta side-files become broadcast variables.
 - Python only off the hot path: Arrow-batched pandas UDFs / mapInPandas for
   the SGD kernel and subset expansion; built-in functions everywhere else.
+  Local sessions start those Python workers through ``graft_daemon``
+  (repository root), which imports pyspark from site-packages when its
+  version equals the one in Spark's ``pyspark.zip`` and otherwise keeps
+  Spark's path, so no task pays for re-reading the zip's directory. A
+  cluster master keeps Spark's default daemon (``session.session_conf``).
 """
 
 from mapreduce_code_spark.session import get_spark

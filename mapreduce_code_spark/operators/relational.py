@@ -1559,30 +1559,35 @@ FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)
 
 
 def rolling_24h_user_activity(events: DataFrame) -> DataFrame:
-    """Per event: same-user activity in the trailing 24 h — a RANGE
-    interval frame (value-based, unlike the ROWS frames elsewhere):
+    """Per event: same-user activity in the trailing 24 h —
     ``(event_id, user_id, ts, n_24h, value_sum_micro_24h)`` where the
-    frame is ``[ts - 24h, ts]`` inclusive.
+    frame is ``[ts - 24h, ts]`` inclusive (a RANGE frame on integer µs).
 
-    One shuffle+sort per user partition; the frame is evaluated by the
-    running-window machinery, never by a self-join — the self-join
-    formulation of "events in my trailing day" is the quadratic trap
-    this operator exists to avoid.
+    Each figure is a running total up to ``ts`` minus the running total
+    up to ``ts - 24h - 1µs``. Invariant: every frame starts at unbounded
+    preceding, which Spark evaluates incrementally, so a user's partition
+    costs one sort plus a linear scan however hot the user; a sliding
+    ``[ts - 24h, ts]`` frame would re-aggregate its whole buffer each time
+    it moves, and a self-join is quadratic. The difference is exact: keys
+    are integer µs, the sums are ``long``, and ``value`` is non-null in
+    the events schema, so an empty "before" frame's NULL sum counts as 0.
     """
     from mapreduce_code_spark.streaming.windows import _qvalue
 
     day_us = 24 * 3600 * 1_000_000
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.unix_micros("ts"))
-        .rangeBetween(-day_us, 0)
-    )
+    upto = Window.partitionBy("user_id").orderBy(F.unix_micros("ts"))
+    now = upto.rangeBetween(Window.unboundedPreceding, 0)
+    before = upto.rangeBetween(Window.unboundedPreceding, -day_us - 1)
+
+    def trailing(agg):
+        return agg.over(now) - F.coalesce(agg.over(before), F.lit(0))
+
     return events.select(
         "event_id",
         "user_id",
         "ts",
-        F.count(F.lit(1)).over(w).alias("n_24h"),
-        F.sum(_qvalue()).over(w).alias("value_sum_micro_24h"),
+        trailing(F.count(F.lit(1))).alias("n_24h"),
+        trailing(F.sum(_qvalue())).alias("value_sum_micro_24h"),
     )
 
 

@@ -989,19 +989,15 @@ def hybrid_rrf(
     # Fusion as UNION + per-(query, doc) aggregate instead of a
     # FULL-OUTER join: each leg emits a (q, d) at most once, so max()
     # over the ≤2 union rows reconstructs exactly the join's (r_dense,
-    # r_sparse) pairs — same row set, same values. The join needed
-    # THREE exchanges (both ~100-row legs re-shuffled from hash(q) to
-    # hash(q, d) for the SortMergeJoin, then the final window re-
-    # shuffled back to hash(q)). Both legs arrive hash(q)-partitioned,
-    # which subset-key-satisfies the (q, d) aggregate AND the final rank
-    # window, so the union's ``repartition(query_id)`` plans no exchange
-    # and the whole operator plans 5 net exchanges (dense leg 2, sparse
-    # leg 3) where the join form planned 11. Stage barriers dominate
-    # these tiny frames, and at scale the fused frame is n_queries x
-    # 2·k_leg rows — never a skew concern.
+    # r_sparse) pairs — same row set, same values. Invariant: both legs
+    # arrive hash(query_id)-partitioned with the same partition count, so
+    # the union is too, and that satisfies both the (q, d) aggregate and
+    # the final per-query rank window with no exchange of their own: the
+    # operator plans 5 exchanges, all inside the legs (dense 2, sparse 3),
+    # where the join form planned 11. At scale the fused frame is
+    # n_queries x 2·k_leg rows — never a skew concern.
     fused = (
         dense.unionByName(sparse)
-        .repartition(F.col("query_id"))
         .groupBy("query_id", "doc_id")
         .agg(
             F.max("r_dense").alias("r_dense"),

@@ -9,6 +9,10 @@ cluster scale (1000 executors / 100 TB):
   scale AQE's coalescing makes the initial number a ceiling, not a target.
 - Arrow enabled: every pandas UDF / mapInPandas crossing is batched.
 - Session timezone pinned UTC so DuckDB-oracle comparisons are stable.
+- Local sessions start Python workers through ``graft_daemon`` (repository
+  root), which imports pyspark from site-packages instead of Spark's
+  ``pyspark.zip`` when both hold the same version, so no task pays for
+  re-reading the zip's directory (``session_conf``).
 """
 
 from __future__ import annotations
@@ -30,19 +34,12 @@ def _tmpfs_local_dir() -> str | None:
     """RAM-backed ``spark.local.dir`` for this process, or None to keep
     Spark's default (disk) behavior.
 
-    Why (r16 verdict #1): the r16 probe proved a concurrent small-file
-    fsync/rename writer on the root filesystem selectively inflates
-    queries whose timed path commits files there — and after the
-    streamed checkpoints moved to tmpfs (``scratch.py``), the driver
-    window's flags moved one tier down, onto batch rows whose SHUFFLE
-    writes still landed on the root disk via the default
-    ``spark.local.dir=/tmp``. Shuffle blocks at bench scale (sf0.1) are
-    single-digit MBs per query — trivially RAM-safe in 128 GiB — so the
-    bench/driver session's shuffle scratch moves to tmpfs too, taking
-    every remaining timed-path root-disk commit out of reach of
-    whatever else the host is fsyncing. On a real cluster this knob is
-    moot: executors get dedicated local SSD/NVMe scratch, not a shared
-    root disk.
+    Invariant: no timed shuffle or spill write of a local session
+    lands on the root disk, where any other writer's fsync/rename
+    traffic can stall it. Shuffle blocks at bench scale (sf0.1) are
+    single-digit MBs per query, so tmpfs holds them easily. On a real
+    cluster this knob is moot: executors get dedicated local SSD/NVMe
+    scratch, not a shared root disk.
 
     Honors ``SPARK_GRAFT_DISK_LOCAL=1`` (via ``scratch._ram_base``) for
     blowup-tier probes whose spill could pressure tmpfs, and returns
@@ -65,7 +62,7 @@ def _tmpfs_local_dir() -> str | None:
 # from compressed shuffle bytes. Dictionary/RLE encodings compress a
 # 99%-duplicate column ~100x, so either estimate can sit two orders of
 # magnitude under the in-memory HashedRelation a broadcast must build.
-# Measured (r12 sf10 probe tier): a 12-query run over a 100x verbatim-
+# Measured at the sf10 probe tier: a 12-query run over a 100x verbatim-
 # duplicated corpus died in BroadcastExchangeExec with
 # notEnoughMemoryToBuildAndBroadcastTableError after a ~1 GiB single-
 # allocation GC-locker retry — an AQE runtime conversion whose shuffle
@@ -112,6 +109,48 @@ def restore_confs(spark: SparkSession, prev: dict[str, str | None]) -> None:
             spark.conf.set(k, v)
 
 
+# graft_daemon.py sits in the repository root, next to this package
+_DAEMON_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def session_conf(
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The conf ``get_spark`` builds its session with; ``extra_conf``
+    entries win."""
+    master = master or f"local[{DEFAULT_CPUS}]"
+    n_shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    conf = {
+        "spark.master": master,
+        "spark.sql.shuffle.partitions": str(n_shuffle),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        # events.parquet stores TIMESTAMP(NANOS); Spark has no nanos type —
+        # read as long and convert via exact integer division (sources.io)
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    }
+    # Python workers start through graft_daemon. Invariant: a worker
+    # imports pyspark from site-packages only when that copy's version
+    # equals the one in Spark's pyspark.zip; the daemon checks this once
+    # per start and otherwise keeps Spark's path. Only local masters
+    # engage it, because only their workers share the driver's filesystem
+    # and so see _DAEMON_DIR; a cluster keeps Spark's pyspark.daemon.
+    if master.startswith("local"):
+        conf["spark.python.daemon.module"] = "graft_daemon"
+        conf["spark.executorEnv.PYTHONPATH"] = _DAEMON_DIR
+    local_dir = _tmpfs_local_dir()
+    if local_dir:
+        conf["spark.local.dir"] = local_dir
+    return {**conf, **(extra_conf or {})}
+
+
 def get_spark(
     app_name: str = "mapreduce_code_spark",
     master: str | None = None,
@@ -123,28 +162,30 @@ def get_spark(
     On a real cluster the caller passes ``master=None`` and lets
     spark-submit decide; locally we default to ``local[$SPARK_GRAFT_CPUS]``.
     """
-    master = master or f"local[{DEFAULT_CPUS}]"
-    n_shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(n_shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # events.parquet stores TIMESTAMP(NANOS); Spark has no nanos type —
-        # read as long and convert via exact integer division (sources.io)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    )
-    local_dir = _tmpfs_local_dir()
-    if local_dir:
-        builder = builder.config("spark.local.dir", local_dir)
-    for k, v in (extra_conf or {}).items():
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in session_conf(master, shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def worker_pyspark(spark: SparkSession) -> tuple[str, list[str]]:
+    """``pyspark.__file__`` in a Python worker of ``spark``, and the
+    ``.zip``/``.jar`` entries on that worker's ``sys.path``. Runs one
+    one-row ``mapInPandas`` task."""
+    row = spark.range(0, 1, 1, 1).mapInPandas(
+        _probe_worker, "pyspark string, archives array<string>"
+    ).first()
+    return row.pyspark, list(row.archives)
+
+
+def _probe_worker(batches):
+    import sys
+
+    import pandas as pd
+    import pyspark
+
+    archives = [p for p in sys.path if p.endswith((".zip", ".jar"))]
+    for _ in batches:
+        yield pd.DataFrame({"pyspark": [pyspark.__file__], "archives": [archives]})

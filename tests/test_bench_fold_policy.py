@@ -218,11 +218,13 @@ def test_stdout_payloads_two_line_protocol():
 
     timings = {f"relational_query_name_number_{i:02d}": 1.234 for i in range(98)}
     full, short = stdout_payloads(
-        timings, timings, ["relational_query_name_number_07"], False, "0.1", 32
+        timings, timings, ["relational_query_name_number_07"], False, "0.1", 32,
+        "site-packages",
     )
     short_line = json.dumps(short, separators=(",", ":"))
     assert len(short_line) < 1000, "short line must fit a 2000-char tail"
     assert "queries" not in short
+    assert short["py_workers"] == "site-packages"
     assert full["queries"] == {n: 1.234 for n in timings}
     assert full["regressed_vs_prior"] == ["relational_query_name_number_07"]
     assert full["cpus"] == 32

@@ -382,6 +382,11 @@ def test_rolling_24h_frame(spark):
             (2, datetime(2024, 1, 1, 12), 1, "click", 2.0, "{}"),
             (3, datetime(2024, 1, 2, 6), 1, "click", 4.0, "{}"),  # ev1 aged out
             (4, datetime(2024, 1, 1, 1), 2, "click", 8.0, "{}"),  # other user
+            # boundary: exactly 24h earlier counts, 24h + 1µs earlier does not
+            (5, datetime(2024, 1, 1, 0), 3, "click", 16.0, "{}"),
+            (6, datetime(2024, 1, 2, 0), 3, "click", 32.0, "{}"),
+            (7, datetime(2024, 1, 1, 0), 4, "click", 64.0, "{}"),
+            (8, datetime(2024, 1, 2, 0, 0, 0, 1), 4, "click", 128.0, "{}"),
         ],
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
@@ -391,6 +396,8 @@ def test_rolling_24h_frame(spark):
     assert got[2] == (2, 3_000_000)
     assert got[3] == (2, 6_000_000)  # ev2 + ev3; ev1 is 30h old
     assert got[4] == (1, 8_000_000)
+    assert got[6] == (2, 48_000_000)  # ev5 is exactly 24h old
+    assert got[8] == (1, 128_000_000)  # ev7 is 24h + 1µs old
 
 
 def test_scd2_intervals_tile(spark, sf_dir):
