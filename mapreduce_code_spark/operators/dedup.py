@@ -14,15 +14,22 @@ Cross-engine exactness: every hash is derived from ``md5`` hex strings
 anywhere.
 
 Scale design (100 TB):
-- Shingling is a per-row flatMap — no shuffle. Signatures are one
-  ``groupBy(doc_id)`` with map-side partial ``min``/conditional-sum
-  aggregation; shuffle volume is O(docs × n_hashes), not O(shingles).
-- LSH pair-gen joins on (band, band_key) — the classic band-bucket join;
-  bucket skew is bounded because identical band keys imply near-identical
-  signatures.
-- Jaccard pair-gen is an inverted-index self-join on shingle, with a
-  document-frequency cap (``max_df``) that drops stop-shingles before the
-  join — the standard guard against quadratic hot-key blowup.
+- One representation for the near-dup family: :func:`doc_shingle_sets`
+  shingles each document (a per-row flatMap, no shuffle), hashes every
+  shingle to a 60-bit id and groups the ids per document ONCE, into a
+  sorted distinct array plus its size. That ``groupBy(doc_id)`` is the
+  only place shingles meet per document.
+- MinHash signatures and LSH band keys are per-row expressions over the
+  set — no shuffle between the set and the band join. LSH pair-gen joins
+  on (band, band_key) — the classic band-bucket join; bucket skew is
+  bounded because identical band keys imply near-identical signatures.
+- The exact rerank of LSH candidates joins each pair to its two sets and
+  intersects them in the row: O(|candidates|) shuffled rows, not
+  O(shingles).
+- Exhaustive Jaccard pair-gen is an inverted-index self-join on shingle
+  id over the exploded sets, with a document-frequency cap (``max_df``)
+  that drops stop-shingles before the join — the standard guard against
+  quadratic hot-key blowup.
 """
 
 from __future__ import annotations
@@ -131,28 +138,29 @@ def _exploded_shingles(documents: DataFrame, k: int) -> DataFrame:
     )
 
 
-def shingles(documents: DataFrame, k: int = 3) -> DataFrame:
-    """Distinct word k-shingles: ``(doc_id, shingle)`` — the
-    string-valued view, for callers that need the shingle text."""
-    return _exploded_shingles(documents, k).distinct()
+def doc_shingle_sets(documents: DataFrame, k: int = 3) -> DataFrame:
+    """One row per document: ``(doc_id, sids, sz)``, where ``sids`` is the
+    sorted, distinct array of the document's 60-bit md5-derived shingle
+    ids and ``sz = size(sids)``. The single per-document representation
+    every near-dup kernel reads: MinHash, the LSH band keys, the exact
+    Jaccard rerank and the inverted index are all per-row functions of
+    it, so no kernel re-groups shingles by document.
 
-
-def shingle_ids(documents: DataFrame, k: int = 3) -> DataFrame:
-    """Distinct ``(doc_id, sid)`` where ``sid`` is the 60-bit md5-derived
-    shingle id. This is the scale path every dedup operator shares: the
-    id is computed BEFORE the distinct, so the dedup shuffle (and every
-    downstream join/aggregate) moves 8-byte integers instead of ~35-byte
-    shingle strings — ~4× less shuffle volume — and md5 runs exactly once
-    per shingle occurrence for ALL consumers (MinHash takes its 28-bit
-    hash as the id's top bits). 60-bit id collisions conflate two
-    shingles with odds ~|shingles|²/2^61 — negligible at 100 TB vocab
-    sizes, and acceptable for near-dup metrics (same trade the
-    inverted-index join already made in round 1).
+    md5 runs once per shingle occurrence, after the explode: a hash
+    inside ``transform`` would run interpreted. The one shuffle is the
+    ``groupBy(doc_id)``, whose partial ``collect_set`` moves 8-byte ids
+    instead of ~35-byte shingle strings. Docs shorter than k words get
+    no row (an empty set would give every short doc the same empty band
+    key). 60-bit id collisions conflate two shingles with odds
+    ~|shingles|²/2^61 — negligible at 100 TB vocab sizes, and acceptable
+    for near-dup metrics.
     """
     return (
         _exploded_shingles(documents, k)
         .select("doc_id", _token_hash(F.col("shingle")).alias("sid"))
-        .distinct()
+        .groupBy("doc_id")
+        .agg(F.array_sort(F.collect_set("sid")).alias("sids"))
+        .withColumn("sz", F.size("sids").cast("bigint"))
     )
 
 
@@ -177,72 +185,46 @@ _MH_B = [
 ]
 
 
-def minhash_signatures(
-    documents: DataFrame,
-    n_hashes: int = 12,
-    k: int = 3,
-    sh_ids: DataFrame | None = None,
+def band_keys(
+    sets: DataFrame, n_hashes: int = 12, band_size: int = 3
 ) -> DataFrame:
-    """MinHash signatures: ``(doc_id, seed, mh)``, one row per doc per
-    hash function; ``mh`` = min over shingles of the seed's universal
-    hash of the shingle id.
+    """LSH band keys of :func:`doc_shingle_sets` rows: ``(doc_id, band,
+    band_key)``, one row per doc per band. Signature component ``mh_i``
+    is the minimum over the doc's shingle ids of seed i's universal
+    hash; band ``b`` holds components ``b·band_size …`` and its key is
+    their '|'-joined decimal strings in seed order. Every step is a
+    per-row expression — no shuffle between the set and the band join.
 
-    Computed as ``n_hashes`` parallel ``min`` aggregates in ONE
-    groupBy(doc_id) — shuffle volume O(docs · n_hashes) with map-side
-    partial mins, instead of exploding every shingle ``n_hashes``×
-    (which would multiply the shuffled data by the signature width).
-
-    The 28-bit universal-hash input is the top 28 bits of the shared
-    60-bit shingle id (first 7 md5 hex chars — numerically identical to
-    hashing the shingle directly, so the DuckDB oracles are unchanged);
-    small enough that ``a·x`` stays < 2^59.
+    The 28-bit universal-hash input is the top 28 bits of the 60-bit
+    shingle id (first 7 md5 hex chars — numerically identical to hashing
+    the shingle directly, so the DuckDB oracles are unchanged); small
+    enough that ``a·x`` stays < 2^59.
     """
     if n_hashes > len(_MH_A):
         raise ValueError(f"n_hashes > {len(_MH_A)} needs more coefficients")
-    if sh_ids is None:
-        sh_ids = shingle_ids(documents, k)
-    hashed = sh_ids.withColumn("h", F.shiftright(F.col("sid"), 32))
-    # parsed SQL text, one py4j call per aggregate (the r9
-    # plan-construction audit: Column-composed builds cost real driver
-    # time per fresh plan). {a}L/{b}L keep the literals BIGINT exactly
-    # as F.lit(int) promoted them inside the int64 products.
-    aggs = [
-        F.expr(
-            f"min(({_MH_A[i]}L * h + {_MH_B[i]}L) % {MINHASH_P}L)"
-        ).alias(f"mh_{i}")
-        for i in range(n_hashes)
-    ]
-    wide = hashed.groupBy("doc_id").agg(*aggs)
-    pairs = F.expr(
-        "array("
+    # parsed SQL text, one py4j call per component: Column-composed
+    # builds cost real driver time per fresh plan. {a}L/{b}L keep the
+    # literals BIGINT inside the int64 products.
+    sigs = sets.select(
+        "doc_id",
+        *(
+            F.expr(
+                f"array_min(transform(sids, x -> ({_MH_A[i]}L * "
+                f"shiftright(x, 32) + {_MH_B[i]}L) % {MINHASH_P}L))"
+            ).alias(f"mh_{i}")
+            for i in range(n_hashes)
+        ),
+    )
+    bands = ", ".join(
+        f"struct({lo // band_size} AS band, concat_ws('|', "
         + ", ".join(
-            f"struct({i} AS seed, mh_{i} AS mh)" for i in range(n_hashes)
+            f"CAST(mh_{i} AS STRING)"
+            for i in range(lo, min(lo + band_size, n_hashes))
         )
-        + ")"
+        + ") AS band_key)"
+        for lo in range(0, n_hashes, band_size)
     )
-    return wide.select("doc_id", F.explode(pairs).alias("p")).select(
-        "doc_id", F.col("p.seed").alias("seed"), F.col("p.mh").alias("mh")
-    )
-
-
-def band_keys(sigs: DataFrame, band_size: int = 3) -> DataFrame:
-    """LSH band keys from signatures: ``(doc_id, band, band_key)`` where
-    the key is the '|'-joined signature components in seed order —
-    shared by same-corpus pair-gen and the incremental cross-corpus
-    join."""
-    return (
-        sigs.withColumn("band", (F.col("seed") / band_size).cast("int"))
-        .groupBy("doc_id", "band")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("seed", "mh"))),
-                    lambda s: s["mh"].cast("string"),
-                ),
-                "|",
-            ).alias("band_key")
-        )
-    )
+    return sigs.select("doc_id", F.expr(f"inline(array({bands}))"))
 
 
 def minhash_lsh_pairs(
@@ -250,7 +232,7 @@ def minhash_lsh_pairs(
     n_hashes: int = 12,
     band_size: int = 3,
     k: int = 3,
-    sh_ids: DataFrame | None = None,
+    sets: DataFrame | None = None,
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing at least one band of the MinHash
     signature. Returns ``(doc_a, doc_b)``, doc_a < doc_b, distinct.
@@ -258,10 +240,13 @@ def minhash_lsh_pairs(
     Bands = consecutive groups of ``band_size`` signature components;
     the band key is the '|'-joined components in seed order. Pair-gen is
     an equi-join on (band, band_key) — LSH's whole point is that this
-    join replaces the O(n^2) all-pairs comparison at scale.
+    join replaces the O(n^2) all-pairs comparison at scale. ``sets``
+    (the documents' :func:`doc_shingle_sets`) is built here unless the
+    caller already holds it.
     """
-    sigs = minhash_signatures(documents, n_hashes, k, sh_ids=sh_ids)
-    bands = band_keys(sigs, band_size)
+    if sets is None:
+        sets = doc_shingle_sets(documents, k)
+    bands = band_keys(sets, n_hashes, band_size)
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -275,6 +260,42 @@ def minhash_lsh_pairs(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .distinct()
+    )
+
+
+def _exact_rerank(
+    cand: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    a: tuple[str, str],
+    b: tuple[str, str],
+    threshold: float,
+) -> DataFrame:
+    """Exact Jaccard of candidate pairs, read off both sides' shingle-id
+    sets: ``cand`` holds the pair columns ``a[0]``/``b[0]``, and the
+    result is ``(a[0], b[0], shared, a[1], b[1], jaccard)`` with sizes
+    named ``a[1]``/``b[1]``. ``shared = |A ∩ B|`` and ``jaccard = shared
+    / (|A| + |B| - shared)`` — one division of exact integers, kept when
+    ``>= threshold``. A pair sharing no shingle is dropped at any
+    threshold, as the shingle-level join it replaces (and the oracles)
+    never emit it."""
+
+    def side(sets: DataFrame, key: str, size: str, ids: str) -> DataFrame:
+        return sets.select(
+            F.col("doc_id").alias(key), F.col("sids").alias(ids),
+            F.col("sz").alias(size),
+        )
+
+    (key_a, size_a), (key_b, size_b) = a, b
+    shared = F.size(F.array_intersect("ids_a", "ids_b")).cast("bigint")
+    jac = F.col("shared") / (F.col(size_a) + F.col(size_b) - F.col("shared"))
+    return (
+        cand.join(side(sets_a, key_a, size_a, "ids_a"), key_a)
+        .join(side(sets_b, key_b, size_b, "ids_b"), key_b)
+        .withColumn("shared", shared)
+        .withColumn("jaccard", jac)
+        .filter((F.col("shared") > 0) & (F.col("jaccard") >= threshold))
+        .select(key_a, key_b, "shared", size_a, size_b, "jaccard")
     )
 
 
@@ -335,10 +356,9 @@ def ngram_jaccard_pairs(
     with jaccard >= threshold.
 
     Jaccard is a single division of exact integers — bit-identical in any
-    engine. Shingles are reduced to 60-bit md5-derived ids before the
-    shuffle-heavy steps: the inverted-index join then moves 8-byte keys
-    instead of ~35-byte strings (collision odds at 100 TB vocab sizes are
-    ~|shingles|²/2^61 — negligible, and acceptable for a near-dup metric).
+    engine. The inverted index is the exploded :func:`doc_shingle_sets`,
+    so the join moves 8-byte shingle ids, and each posting carries its
+    document's size, so no sizes aggregate is joined back.
 
     Guarded against accidental large-corpus use: raises ``ValueError``
     above ``QUADRATIC_GUARD_MAX_DOCS`` documents unless
@@ -358,37 +378,34 @@ def ngram_jaccard_pairs(
                 f"near_dup_pairs_scalable for large corpora, or pass "
                 f"allow_quadratic=True to force."
             )
-    sh = _persist(shingle_ids(documents, k))
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    rare = (
-        sh.groupBy("sid")
-        .agg(F.count(F.lit(1)).alias("df"))
+    # the sets are distinct per doc, so a window count over sid IS the
+    # document frequency; it leaves the rows hash(sid)-partitioned, which
+    # the self-join on sid reuses. ``sz`` rides along: sizes count every
+    # shingle, ``shared`` only the ones with df <= max_df. Persisted: both
+    # join sides read the one set build.
+    inv = (
+        _persist(doc_shingle_sets(documents, k))
+        .select("doc_id", "sz", F.explode("sids").alias("sid"))
+        .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("sid")))
         .filter(F.col("df") <= max_df)
-        .select("sid")
     )
-    inv = sh.join(rare, "sid")
     a = inv.alias("a")
     b = inv.alias("b")
-    shared = (
+    jac = F.col("shared") / (F.col("size_a") + F.col("size_b") - F.col("shared"))
+    return (
         a.join(
             b,
             (F.col("a.sid") == F.col("b.sid"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.sz").alias("size_a"),
+            F.col("b.sz").alias("size_b"),
         )
         .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("size_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("size_b"))
-    return (
-        shared.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("shared") / (F.col("size_a") + F.col("size_b") - F.col("shared")),
-        )
+        .withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "shared", "size_a", "size_b", "jaccard")
     )
@@ -554,41 +571,19 @@ def near_dup_pairs_scalable(
     ``ngram_jaccard_pairs`` compares all shingle-sharing pairs — correct
     but quadratic in per-shingle document frequency. Here the candidate
     set comes from the LSH band join (sub-quadratic by construction), and
-    the exact Jaccard is computed only for candidate pairs, so the rerank
-    join's left side is |candidates|, not |corpus|². Returns
+    the exact Jaccard is computed only for candidate pairs. Both read one
+    persisted :func:`doc_shingle_sets` frame: the band keys are per-row
+    functions of each set, and the rerank joins each candidate pair to
+    its two sets and intersects them in the row, so the shuffle after the
+    band join is O(|candidates|) rows, never O(shingles). Returns
     ``(doc_a, doc_b, shared, size_a, size_b, jaccard)``; precision is
     exact (every emitted pair's jaccard is true and >= threshold), recall
     is the LSH band recall.
     """
-    # one shingle-ID pass feeds BOTH the LSH signatures and the rerank —
-    # the explode+md5-heaviest stage runs once over 8-byte ids, persisted
-    # for its 3 uses (released via release_persisted() once consumed)
-    sh = _persist(shingle_ids(documents, k))
-    cand = minhash_lsh_pairs(documents, n_hashes, band_size, k, sh_ids=sh)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    shared = (
-        cand.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            sh.alias("sb"),
-            (F.col("doc_b") == F.col("sb.doc_id"))
-            & (F.col("sa.sid") == F.col("sb.sid")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    jac = F.col("shared") / (F.col("size_a") + F.col("size_b") - F.col("shared"))
-    return (
-        shared.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("size_a")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("size_b")),
-            "doc_b",
-        )
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "shared", "size_a", "size_b", "jaccard")
+    sets = _persist(doc_shingle_sets(documents, k))
+    cand = minhash_lsh_pairs(documents, n_hashes, band_size, k, sets=sets)
+    return _exact_rerank(
+        cand, sets, sets, ("doc_a", "size_a"), ("doc_b", "size_b"), threshold
     )
 
 
@@ -599,7 +594,7 @@ def incremental_near_dups(
     n_hashes: int = 12,
     band_size: int = 3,
     k: int = 3,
-    corpus_sh: DataFrame | None = None,
+    corpus_sets: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental ingest dedup: near-dups of NEW documents against an
     EXISTING corpus — the production shape, where each arriving shard is
@@ -609,28 +604,24 @@ def incremental_near_dups(
 
     The LSH band join runs new-side bands × corpus-side bands only, so
     per-shard cost is O(|shard| + matching buckets), independent of
-    corpus-internal duplication. In a deployed pipeline the corpus-side
-    signatures/bands and shingle ids are computed once at acceptance
-    time and stored (they are plain tables — the mergeable-sketch
-    storage story); here they are derived inline from the corpus frame
-    so the operator is self-contained and oracle-checkable — or passed
-    in as ``corpus_sh`` by a caller that checks MANY shards against one
-    static corpus (the streamed foreachBatch twin), so the corpus-side
-    shingle pass runs once, not once per shard.
+    corpus-internal duplication; the exact rerank intersects each
+    candidate's two shingle-id sets in the row. The corpus side is one
+    :func:`doc_shingle_sets` frame — in a deployed pipeline it is
+    computed once at acceptance time and stored (a plain table). Here it
+    is derived inline from ``corpus_docs`` so the operator is
+    self-contained and oracle-checkable, or passed in as ``corpus_sets``
+    by a caller that checks MANY shards against one static corpus (the
+    streamed foreachBatch twin), so the corpus-side shingle pass runs
+    once, not once per shard.
     """
-    new_sh = _persist(shingle_ids(new_docs, k))
-    corp_sh = (
-        corpus_sh
-        if corpus_sh is not None
-        else _persist(shingle_ids(corpus_docs, k))
+    new_sets = _persist(doc_shingle_sets(new_docs, k))
+    corp_sets = (
+        corpus_sets
+        if corpus_sets is not None
+        else _persist(doc_shingle_sets(corpus_docs, k))
     )
-    nb = band_keys(
-        minhash_signatures(new_docs, n_hashes, k, sh_ids=new_sh), band_size
-    )
-    cb = band_keys(
-        minhash_signatures(corpus_docs, n_hashes, k, sh_ids=corp_sh),
-        band_size,
-    )
+    nb = band_keys(new_sets, n_hashes, band_size)
+    cb = band_keys(corp_sets, n_hashes, band_size)
     cand = (
         nb.alias("n")
         .join(
@@ -644,41 +635,9 @@ def incremental_near_dups(
         )
         .distinct()
     )
-    n_sizes = new_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    c_sizes = corp_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    shared = (
-        cand.join(new_sh.alias("xs"), F.col("new_doc") == F.col("xs.doc_id"))
-        .join(
-            corp_sh.alias("ys"),
-            (F.col("corpus_doc") == F.col("ys.doc_id"))
-            & (F.col("xs.sid") == F.col("ys.sid")),
-        )
-        .groupBy("new_doc", "corpus_doc")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    jac = F.col("shared") / (
-        F.col("size_new") + F.col("size_corpus") - F.col("shared")
-    )
-    return (
-        shared.join(
-            n_sizes.select(
-                F.col("doc_id").alias("new_doc"), F.col("sz").alias("size_new")
-            ),
-            "new_doc",
-        )
-        .join(
-            c_sizes.select(
-                F.col("doc_id").alias("corpus_doc"),
-                F.col("sz").alias("size_corpus"),
-            ),
-            "corpus_doc",
-        )
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            "new_doc", "corpus_doc", "shared", "size_new", "size_corpus",
-            "jaccard",
-        )
+    return _exact_rerank(
+        cand, new_sets, corp_sets, ("new_doc", "size_new"),
+        ("corpus_doc", "size_corpus"), threshold,
     )
 
 
@@ -878,8 +837,9 @@ def dup_components_star(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
 # ------------------------------------------------- DuckDB oracle builders
 
 def shingles_sql(k: int = 3, source: str = "documents") -> str:
-    """Distinct word k-shingles CTE body — the DuckDB twin of
-    :func:`shingles`, parameterized like the Spark side."""
+    """Distinct word k-shingles CTE body ``(doc_id, shingle)`` — the
+    DuckDB twin of :func:`doc_shingle_sets` (shingle strings where the
+    Spark side holds their ids), parameterized like the Spark side."""
     terms = " || ' ' || ".join(f"w[i+{j}]" for j in range(1, k + 1))
     return f"""
   SELECT DISTINCT doc_id,
@@ -901,7 +861,7 @@ def _coef_values_sql(n_hashes: int) -> str:
 def _sigs_bands_cte_sql(n_hashes: int = 12, band_size: int = 3) -> str:
     """CTE fragment (expects a prior ``sh(doc_id, shingle)`` CTE):
     universal-hash MinHash signatures + band keys, mirroring
-    :func:`minhash_signatures` / :func:`minhash_lsh_pairs` exactly."""
+    :func:`band_keys` / :func:`minhash_lsh_pairs` exactly."""
     return f"""
 hashed AS (
   SELECT doc_id, ('0x' || substr(md5(shingle), 1, 7))::BIGINT AS h FROM sh

@@ -330,7 +330,8 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.exact_dedup(load_table(spark, sf_dir, "documents"))
 
 
-# DuckDB twin of operators.dedup.shingles (k=3, distinct)
+# DuckDB distinct (doc_id, shingle) rows at k=3 — the string-valued twin
+# of operators.dedup.doc_shingle_sets
 _SQL_SHINGLES = dedup.SHINGLES_SQL
 
 
@@ -372,9 +373,9 @@ def q_near_dup_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-path near-dup: LSH candidates + exact Jaccard rerank.
     Routed through the shared ``_near_dup_pairs`` materialization (it IS
     that computation) so this query, as the cache's bench OWNER, re-
-    registers the ``_DF_CACHE`` entry its eviction dropped — without
-    this, an owner run left the cache permanently cold for any consumer
-    sweeping later in the rotation order (review finding)."""
+    registers the ``_DF_CACHE`` entry its eviction dropped; a cache
+    owner that bypassed it would leave the entry cold for every consumer
+    sweeping later in the rotation order."""
     return _near_dup_pairs(spark, sf_dir)
 
 
@@ -387,23 +388,23 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.incremental_near_dups(
         docs.filter(F.col("doc_id") % 2 == 1),
         docs.filter(F.col("doc_id") % 2 == 0),
-        corpus_sh=_corpus_shingles(spark, sf_dir),
+        corpus_sets=_corpus_shingles(spark, sf_dir),
     )
 
 
 def _corpus_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The accepted corpus's (even doc_ids) shingle pass, persisted per
-    (session, sf_dir) — shared by the batch and streamed incremental-
-    dedup rows. Semantically this IS the operator's contract ("shingles
-    computed once at acceptance time, reused for every later ingest
-    check"), so sharing it across the two ingest-demo queries is the
-    honest shape, not a bench shortcut; the streamed row owns the build
-    under bench attribution."""
+    """The accepted corpus's (even doc_ids) shingle-id sets
+    (``dedup.doc_shingle_sets``), persisted per (session, sf_dir) —
+    shared by the batch and streamed incremental-dedup rows. Semantically
+    this IS the operator's contract ("sets computed once at acceptance
+    time, reused for every later ingest check"), so sharing it across the
+    two ingest-demo queries is the honest shape, not a bench shortcut;
+    the streamed row owns the build under bench attribution."""
     return _cached_df(
         "corpus_shingles",
         spark,
         sf_dir,
-        lambda: dedup.shingle_ids(
+        lambda: dedup.doc_shingle_sets(
             load_table(spark, sf_dir, "documents").filter(
                 F.col("doc_id") % 2 == 0
             )
@@ -433,39 +434,37 @@ def q_streamed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 2 == 0
     )
-    # corpus-side shingle pass materialized ONCE, outside the stream —
-    # every micro-batch reuses it instead of re-shingling the static
+    # corpus-side shingle-id sets materialized ONCE, outside the stream —
+    # every micro-batch reuses them instead of re-shingling the static
     # corpus per batch (the "computed once at acceptance time" shape);
     # shared with the batch twin via _corpus_shingles (this row owns
     # the build under bench attribution), _DF_CACHE-persisted so the
     # per-query release_persisted() drain doesn't evict it mid-sweep
-    corp_sh = _corpus_shingles(spark, sf_dir)
-    # materialize BEFORE entering the stream_partitions(8) override so
-    # the persisted layout is always built under the session conf (32
-    # partitions) — identical to the subset-bench prewarm path's
-    # .count(); a lazy first materialization inside the stream would
-    # give the warm cache a different physical layout depending on who
-    # built it (r10 advisor, low)
-    corp_sh.count()
+    corp_sets = _corpus_shingles(spark, sf_dir)
+    # materialize BEFORE entering the stream_partitions(8) override, so
+    # the cached layout is always the session conf's — the same as the
+    # subset-bench prewarm path's .count() builds; a lazy first
+    # materialization inside the stream would make the warm cache's
+    # layout depend on which caller built it
+    corp_sets.count()
     new_stream = load_table_stream(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 2 == 1
     )
-    # RAM-backed scratch (exit-cleaned): the /tmp checkpoint + per-batch
-    # parquet sink put small fsync'd commits in the timed path — the
-    # reproduced driver-window mechanism (r15 verdict #1, scratch.py) —
-    # and the old mkdtemp leaked one dir per run (211 by r15). The out
-    # dir must outlive this call (the returned frame reads it lazily),
-    # so exit-time cleanup, not eager discard.
+    # RAM-backed scratch (see scratch.py): the checkpoint and per-batch
+    # parquet sink commit many small fsync'd files, which must not hit
+    # the root disk inside the timed path. The out dir must outlive this
+    # call (the returned frame reads it lazily), so it is removed at
+    # exit, not discarded here.
     tmp = scratch_dir("dedup_streamed_incremental_")
-    # 8 shuffle partitions (r10 flip): the per-micro-batch LSH band
-    # join + rerank are batch-sized, so 32-task stages are overhead-
-    # bound, but the join does real work — 8 beat both 32 (3.09 s) and
-    # 4 (2.74 s) at sf0.1 (2.16 s; SURVEY §9)
+    # 8 shuffle partitions: the per-micro-batch LSH band join + rerank
+    # are batch-sized, so 32-task stages are overhead-bound, but the join
+    # does real work — 8 beat both 32 (3.09 s) and 4 (2.74 s) at sf0.1
+    # (2.16 s; SURVEY §9)
     with stream_partitions(8):
         return run_batch_transform(
             new_stream,
             lambda batch: dedup.incremental_near_dups(
-                batch, corpus, corpus_sh=corp_sh
+                batch, corpus, corpus_sets=corp_sets
             ),
             f"{tmp}/out",
             f"{tmp}/ckpt",
@@ -1786,8 +1785,8 @@ SHARED_BUILDS: dict[str, tuple[str, Callable, frozenset[str]]] = {
             }
         ),
     ),
-    # the accepted corpus's acceptance-time shingle pass — shared input
-    # of the two incremental-dedup rows; the streamed row owns it
+    # the accepted corpus's acceptance-time shingle-id sets — shared
+    # input of the two incremental-dedup rows; the streamed row owns it
     "corpus_shingles": (
         "dedup_streamed_incremental",
         _corpus_shingles,

@@ -17,11 +17,17 @@ commits are memory-speed and immune to whatever else the host is
 fsyncing; /tmp remains the fallback.
 
 Every directory handed out here is recorded and removed at process
-exit (tmpfs pages are RAM — leaks would be worse than the /tmp debris
-they replace: r15 left 211 orphaned checkpoint dirs under /tmp).
+exit (tmpfs pages are RAM — a leaked dir holds memory until reboot).
 Callers whose results are consumed lazily (a returned DataFrame
 reading a scratch parquet sink) rely on exactly this exit-time
-cleanup; callers done with a dir sooner should `discard()` it.
+cleanup; callers done with a dir sooner should `discard()` it. A
+process killed outright (SIGKILL, e.g. ``timeout -k``) runs no exit
+hook, so each dir's name also carries its creator's PID: the first
+`scratch_dir` call of every later process removes the dirs under its
+base whose creator no longer exists. A live PID keeps its dirs, even if
+the PID was reused — a leak is recoverable, deleting a running
+stream's checkpoint is not. The PID test assumes the creators share
+this process's PID namespace, as processes of one host or container do.
 
 ``SPARK_GRAFT_DISK_LOCAL=1`` forces every scratch dir (and, via
 ``session.py``, ``spark.local.dir``) back onto the default disk temp
@@ -35,6 +41,7 @@ from __future__ import annotations
 
 import atexit
 import os
+import re
 import shutil
 import tempfile
 
@@ -92,13 +99,54 @@ def _ram_base() -> str | None:
     return base
 
 
+# A scratch dir's name ends in ".sgpid<creator pid>"; only names of this
+# exact shape are ever swept.
+_PID_TAG = re.compile(r"\.sgpid(\d+)$")
+_SWEPT: set[str] = set()
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True  # exists, owned by another user
+    return True
+
+
+def _sweep_dead(base: str) -> None:
+    """Remove the scratch dirs under ``base`` whose creating process no
+    longer exists (it was killed before its exit hook ran)."""
+    try:
+        names = os.listdir(base)
+    except OSError:
+        return
+    for name in names:
+        m = _PID_TAG.search(name)
+        path = os.path.join(base, name)
+        if (
+            m
+            and not _pid_alive(int(m.group(1)))
+            and os.path.isdir(path)
+            and not os.path.islink(path)
+        ):
+            shutil.rmtree(path, ignore_errors=True)
+
+
 def scratch_dir(prefix: str) -> str:
     """A fresh private scratch directory — tmpfs-backed when the host
     has /dev/shm, else the default temp root — removed at process
     exit. Fresh per call: streaming file sources remember processed
     files in their checkpoint, so a REUSED checkpoint would make a
-    second bounded run read "no new data" and return empty."""
-    d = tempfile.mkdtemp(prefix=prefix, dir=_ram_base())
+    second bounded run read "no new data" and return empty. The first
+    call per base dir first removes the dirs dead processes left there.
+    """
+    base = _ram_base() or tempfile.gettempdir()
+    if base not in _SWEPT:
+        _SWEPT.add(base)
+        _sweep_dead(base)
+    d = tempfile.mkdtemp(prefix=prefix, suffix=f".sgpid{os.getpid()}", dir=base)
     _CREATED.append(d)
     return d
 

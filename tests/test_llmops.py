@@ -126,6 +126,10 @@ ORACLED = [
     "dedup_exact",
     "dedup_minhash_lsh",
     "dedup_ngram_jaccard",
+    "dedup_near_dup_scalable",
+    "dedup_incremental",
+    "dedup_streamed_incremental",
+    "dedup_components_starcontract",
     "dedup_simhash",
     "similarity_topk_cosine",
     "similarity_cosine_dups",
@@ -271,17 +275,25 @@ def test_near_dup_scalable_vs_exhaustive(spark, sf_dir):
 
 def test_short_and_empty_docs_dont_crash(spark):
     """Docs shorter than k words produce zero shingles/fingerprints (the
-    sequence(0, negative) slice crash regression)."""
+    sequence(0, negative) slice crash regression) and get NO shingle-id
+    set row: an empty set would give every short doc the same empty band
+    key and pair them all up as LSH candidates."""
     from mapreduce_code_spark.functions import text as TXT
 
     docs = spark.createDataFrame(
         [(1, "one two", "en", "s", 7), (2, "", "en", "s", 0),
-         (3, "a b c d e f g h", "en", "s", 15)],
+         (3, "a b c d e f g h", "en", "s", 15),
+         (4, "x y", "en", "s", 3)],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    assert dedup.shingles(docs).filter("doc_id < 3").count() == 0
+    sets = {r["doc_id"]: r for r in dedup.doc_shingle_sets(docs).collect()}
+    assert set(sets) == {3}
+    assert sets[3]["sz"] == 6 and sets[3]["sids"] == sorted(sets[3]["sids"])
     assert dedup.minhash_lsh_pairs(docs).count() == 0
     assert dedup.ngram_jaccard_pairs(docs, threshold=0.0).count() == 0
+    assert dedup.near_dup_pairs_scalable(docs, threshold=0.0).count() == 0
+    odd, even = docs.filter("doc_id % 2 = 1"), docs.filter("doc_id % 2 = 0")
+    assert dedup.incremental_near_dups(odd, even, threshold=0.0).count() == 0
     fp = {r["doc_id"] for r in TXT.winnow_fingerprint(docs).collect()}
     assert fp == {3}
 

@@ -153,6 +153,52 @@ def test_hybrid_rrf_plans_five_net_exchanges(spark, sf_dir):
     assert _net_exchanges(similarity.hybrid_rrf(docs, emb)) == 5
 
 
+def test_near_dup_kernels_read_one_shingle_set_per_doc(spark, sf_dir):
+    """The near-dup kernels read one persisted ``doc_shingle_sets`` build:
+    spread's round-robin plus the groupBy(doc_id) — 2 exchanges, which
+    the printed plan repeats under every reference to the set. So each
+    count below is 2 × (references to a set) + the kernel's own:
+
+    - ``ngram_jaccard_pairs`` 7: the set under both sides of the sid
+      self-join (4), one hash(sid) exchange per side for the df window
+      (2), and the (doc_a, doc_b) count (1); at this size the join
+      itself broadcasts.
+    - ``near_dup_pairs_scalable`` 9: the set under both band-join sides
+      and both rerank sides (8) and the distinct over candidate pairs
+      (1); at this size the band join and rerank joins broadcast.
+    - ``incremental_near_dups`` 9: the new and the corpus set, each under
+      its band-join side and its rerank side (8), and the candidate
+      distinct (1).
+
+    A sizes aggregate or a shingle-level rerank join adds a reference to
+    a set or an exchange and fails this; the exploded-shingle forms the
+    set replaced printed 17, 16 and 16."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_code_spark.operators import dedup
+
+    # the projection keeps these plans apart from the registry's session-
+    # wide caches over the same table (the near-dup pairs, the corpus
+    # sets), which Spark would otherwise substitute into them
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    builds = {
+        "ngram": lambda: dedup.ngram_jaccard_pairs(docs, threshold=0.2),
+        "scalable": lambda: dedup.near_dup_pairs_scalable(docs),
+        "incremental": lambda: dedup.incremental_near_dups(
+            docs.filter(F.col("doc_id") % 2 == 1),
+            docs.filter(F.col("doc_id") % 2 == 0),
+        ),
+    }
+    got = {}
+    for name, build in builds.items():
+        # released per kernel: a live cached set would be substituted
+        # into the next kernel's plan
+        dedup.release_persisted()
+        got[name] = _net_exchanges(build())
+    dedup.release_persisted()
+    assert got == {"ngram": 7, "scalable": 9, "incremental": 9}
+
+
 # Scan-heavy queries with selective predicates: at least one parquet scan
 # must carry a non-empty PushedFilters list — an empty one means the
 # filter runs post-scan and the 100 TB read is unpruned. (The plan
@@ -199,7 +245,7 @@ def test_filters_reach_the_scan(spark, sf_dir, name):
 # NO-OP (no round-robin Exchange before the explode) when the input
 # already has >= shuffle.partitions partitions.
 def test_spread_is_noop_on_well_partitioned_input(spark, sf_dir):
-    from mapreduce_code_spark.operators.dedup import shingles
+    from mapreduce_code_spark.operators.dedup import doc_shingle_sets
     from mapreduce_code_spark.partitioning import spread
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -212,12 +258,12 @@ def test_spread_is_noop_on_well_partitioned_input(spark, sf_dir):
     pre = docs.repartition(n_part)
     assert spread(pre) is pre
 
-    # end-to-end: the shingle plan over a well-partitioned input contains
-    # exactly ONE round-robin exchange — the input's own explicit
+    # end-to-end: the shingle-set plan over a well-partitioned input
+    # contains exactly ONE round-robin exchange — the input's own explicit
     # repartition — i.e. spread() added none (the unconditional form
     # added a second one)
     plan = (
-        shingles(pre)._jdf.queryExecution().executedPlan().toString()
+        doc_shingle_sets(pre)._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("RoundRobinPartitioning") == 1, plan
 

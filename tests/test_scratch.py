@@ -88,6 +88,36 @@ def test_exit_cleanup_resweeps_discarded_dirs(monkeypatch):
     assert SC._DISCARDED == []
 
 
+def test_first_scratch_dir_sweeps_dirs_of_dead_processes(
+    monkeypatch, tmp_path
+):
+    """A process killed before its exit hook (SIGKILL) leaves its scratch
+    dirs behind; their names carry the dead creator's PID, so the next
+    process's first scratch_dir call under the same base removes them —
+    and only them: a dir tagged with a live PID survives, as does a dir
+    without the tag."""
+    import subprocess
+
+    child = subprocess.Popen([sys.executable, "-c", "pass"])
+    child.wait()
+    dead = tmp_path / f"sg_dead_abc.sgpid{child.pid}"
+    live = tmp_path / f"sg_live_abc.sgpid{os.getpid()}"
+    other = tmp_path / "not_a_scratch_dir"
+    for d in (dead, live, other):
+        d.mkdir()
+        (d / "x").write_text("1")
+    monkeypatch.setattr(SC, "_ram_base", lambda: str(tmp_path))
+    monkeypatch.setattr(SC, "_SWEPT", set())
+    d = SC.scratch_dir("sg_sweep_")
+    try:
+        assert d.endswith(f".sgpid{os.getpid()}"), d
+        assert Path(d).name.startswith("sg_sweep_")
+        assert not dead.exists()
+        assert live.is_dir() and other.is_dir()
+    finally:
+        SC.discard(d)
+
+
 def test_disk_local_env_forces_disk_scratch(monkeypatch):
     """SPARK_GRAFT_DISK_LOCAL=1 is the blowup-tier / probe-pre-leg knob
     (r16 verdict #1): every scratch dir must land on the default disk

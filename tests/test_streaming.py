@@ -331,7 +331,9 @@ def test_batch_transform_multi_batch_invariance(spark, tmp_path):
     """run_batch_transform over a 2-file source with maxFilesPerTrigger=1
     processes two real micro-batches, and the accumulated sink equals the
     one-shot batch operator over the union — batching-invariance of the
-    foreachBatch incremental-dedup shape."""
+    foreachBatch incremental-dedup shape. The streamed side reads the
+    corpus through precomputed ``corpus_sets`` (as the registered
+    streamed row does), the batch side derives them inline."""
     from mapreduce_code_spark.operators import dedup
     from mapreduce_code_spark.streaming.windows import run_batch_transform
 
@@ -358,9 +360,12 @@ def test_batch_transform_multi_batch_invariance(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
+    corpus_sets = dedup.doc_shingle_sets(corpus)
     streamed = run_batch_transform(
         stream,
-        lambda b: dedup.incremental_near_dups(b, corpus),
+        lambda b: dedup.incremental_near_dups(
+            b, corpus, corpus_sets=corpus_sets
+        ),
         str(tmp_path / "out"),
         str(tmp_path / "ckpt"),
     )
