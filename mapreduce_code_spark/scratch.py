@@ -5,16 +5,14 @@ The registered streamed queries are CORRECTNESS vehicles: availableNow
 exist only to drive the real streaming engine through a bounded input —
 the durable-checkpoint contract they exercise belongs, in production,
 to a distributed filesystem, not to this host's root disk. Placing
-them under /tmp (disk-backed) put dozens of small synchronous
+them under /tmp (disk-backed) puts dozens of small synchronous
 create/fsync/rename commits inside the timed path of exactly those
-queries — and the r16 probe (`tools/probe_streamed_window.py`)
-reproduced the recurring driver-window flags with a single concurrent
-small-file fsync writer: memory-sink streams inflated 2.0-2.4x, the
-foreachBatch stream 1.5x, batch controls <=1.3x, run median unmoved —
-the precise signature of the r14/r15 driver bench artifacts. The fix:
-scratch space lives on /dev/shm (tmpfs) when available, so scaffold
-commits are memory-speed and immune to whatever else the host is
-fsyncing; /tmp remains the fallback.
+queries, so their times track whatever else the host is fsyncing: a
+single concurrent small-file fsync writer inflated memory-sink streams
+2.0-2.4x and the foreachBatch stream 1.5x, batch controls <=1.3x
+(receipt: `probe_streamed_window.json`). Scratch space therefore lives
+on /dev/shm (tmpfs) when available, so scaffold commits are
+memory-speed and immune to other writers; /tmp remains the fallback.
 
 Every directory handed out here is recorded and removed at process
 exit (tmpfs pages are RAM — a leaked dir holds memory until reboot).
@@ -34,7 +32,7 @@ this process's PID namespace, as processes of one host or container do.
 root — the knob for (a) blowup-tier probes whose staging/shuffle bytes
 could pressure a 50%-of-RAM tmpfs, and (b) the A-leg of pre/post
 probes reproducing the root-disk I/O mechanism this module exists to
-remove (tools/probe_streamed_window.py).
+remove.
 """
 
 from __future__ import annotations

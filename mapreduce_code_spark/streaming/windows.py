@@ -267,9 +267,9 @@ def run_available_now(stream_df: DataFrame, name: str, output_mode: str):
     stream-stream join rows, 4 stores per state partition committing
     every micro-batch) goes to an explicit RAM-backed scratch dir
     instead of Spark's implicit temp checkpoint under /tmp: those
-    small synchronous commits on the root disk were the reproduced
-    driver-window mechanism (r15 verdict #1 — see ``scratch.py``'s
-    module docstring and tools/probe_streamed_window.py). Fresh per
+    small synchronous commits on the root disk make the run's time
+    track other writers on the host (see ``scratch.py``'s module
+    docstring and the ``probe_streamed_window.json`` receipt). Fresh per
     run (a reused checkpoint would mark the source files already
     processed) and removed as soon as the bounded query terminates —
     the memory sink's rows live in the JVM, not the checkpoint."""

@@ -147,8 +147,10 @@ def test_hybrid_rrf_plans_five_net_exchanges(spark, sf_dir):
     join fusion planned 11."""
     from mapreduce_code_spark.operators import similarity
 
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
+    # projections, so no registry cache over the bare tables is
+    # substituted into these plans (see the near-dup pin below)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     assert _net_exchanges(similarity.keyword_ranked(docs)) == 3
     assert _net_exchanges(similarity.hybrid_rrf(docs, emb)) == 5
 

@@ -1,12 +1,12 @@
-"""Pins the RAM-backed scratch-dir contract (r15 verdict #1 fix).
+"""Pins the RAM-backed scratch-dir contract.
 
-The streamed bench rows' checkpoints/state/staging move from /tmp
-(disk — whose small fsync'd commits were the reproduced driver-window
-slowdown, tools/probe_streamed_window.py) to /dev/shm-backed scratch
-dirs that are tracked and removed at process exit. These tests pin the
-placement, the freshness-per-call invariant the streaming file source
-requires, the cleanup hooks, and that the bounded memory-sink runner
-leaves no checkpoint behind."""
+The streamed rows' checkpoints/state/staging live in /dev/shm-backed
+scratch dirs, not on /tmp (disk, whose small fsync'd commits make their
+times track other writers on the host; receipt:
+probe_streamed_window.json), and the dirs are tracked and removed at
+process exit. These tests pin the placement, the freshness-per-call
+invariant the streaming file source requires, the cleanup hooks, and
+that the bounded memory-sink runner leaves no checkpoint behind."""
 
 from __future__ import annotations
 
