@@ -13,9 +13,10 @@ A full-registry run also writes, next to this file:
   bench_timings.json        best-of-REPEATS per query, every run's time,
                             SGD iteration counts
   bench_timings_c{cpus}.json  the same payload, per core count
-  bench_shuffles.json       net shuffle Exchanges per fresh plan
   rotation.json             the correctness-rotation state
-A subset run (query names as arguments) writes none of them.
+A subset run (query names as arguments) writes none of them. Planned
+shuffle counts are not measured here; tools/plan_report.py records
+them in PLANS.md.
 """
 
 from __future__ import annotations
@@ -28,14 +29,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from mapreduce_code_spark import cache
 from mapreduce_code_spark.operators import regression
-from mapreduce_code_spark.operators.dedup import release_persisted
-from mapreduce_code_spark.registry import (
-    SHARED_BUILDS,
-    SOURCE_FIXTURES,
-    evict_cached,
-    queries,
-)
+from mapreduce_code_spark.registry import SHARED_BUILDS, SOURCE_FIXTURES, queries
 from mapreduce_code_spark.session import get_spark, worker_pyspark
 
 # timed runs per query; a query's time is the fastest of them, so one
@@ -135,87 +131,6 @@ def rotation_payload(correctness_dir: Path) -> dict:
     }
 
 
-def net_shuffles(df) -> int:
-    """True shuffle-Exchange count for a DataFrame's physical plan.
-
-    Walks the plan TREE instead of counting substrings of the printed
-    plan: the printer re-expands a cached relation's child plan at every
-    InMemoryTableScan reference, so string counts over-report persisted
-    pipelines wildly (the near-dup query printed 16-56 "Exchanges" for a
-    plan that actually runs 4 net shuffles plus one cached build). Rules:
-    - ``Exchange`` (shuffle) counts; ``BroadcastExchange`` /
-      ``ReusedExchange`` don't (no all-to-all network move).
-    - ``AdaptiveSparkPlan`` descends into its initial plan (fresh
-      unexecuted plans have no runtime re-plan yet).
-    - Each DISTINCT cached relation's build plan is traversed ONCE (its
-      shuffles run once at materialization), not once per scan.
-    """
-    seen_cached: set[str] = set()
-
-    def walk(node) -> int:
-        name = node.nodeName()
-        if name == "AdaptiveSparkPlan":
-            return walk(node.initialPlan())
-        n = 1 if name == "Exchange" else 0
-        if name == "InMemoryTableScan":
-            cached = node.relation().cachedPlan()
-            key = cached.toString()
-            if key not in seen_cached:
-                seen_cached.add(key)
-                n += walk(cached)
-        ch = node.children()
-        for i in range(ch.size()):
-            n += walk(ch.apply(i))
-        return n
-
-    return walk(df._jdf.queryExecution().executedPlan())
-
-
-# Queries whose fn() runs work EAGERLY at DataFrame-construction time.
-# For these a second fn() call to build a "fresh plan" for shuffle
-# counting would re-run the whole computation untimed, and the returned
-# frame's plan is a checkpoint/createDataFrame scan anyway — record the
-# sentinel -1 ("iterative; not one plan") instead. Split by WHY they are
-# eager so PLANS.md can state the right reason per query.
-EAGER_STREAMS = {
-    "events_streamed_tumbling",  # runs an actual writeStream at build
-    "events_streamed_session",  # writeStream at build
-    "events_streamed_view_purchase",  # stream-stream writeStream at build
-    "dedup_streamed_incremental",  # foreachBatch writeStream at build
-    "relational_streamed_hll",  # foreachBatch writeStream at build
-    "sampling_streamed_stratified",  # writeStream at build
-    "events_streamed_anomaly",  # stream-static join writeStream at build
-    "events_streamed_attribution",  # stateful writeStream at build
-    # the two ingest rows share one streamed run: the hash-log row OWNS
-    # it (pays the cold foreachBatch chain at build — evicted before each
-    # timed run), the manifest row reads it warm but still
-    # localCheckpoints its rank at build
-    "pipeline_ingest_manifest",
-    "pipeline_ingest_hash_log",
-}
-EAGER_LOOPS = {  # driver iteration loops: SGD fits, components fixpoint
-    "regression_sgd_linear",
-    "regression_sgd_logistic",
-    "dedup_components_starcontract",
-}
-EAGER_WRITES = {  # physical rewrite at build, result localCheckpointed
-    "pipeline_materialize_epoch",  # writes the epoch-1 shards, audits them
-}
-EAGER = EAGER_STREAMS | EAGER_LOOPS | EAGER_WRITES
-# Lazy ITERATIVE queries whose rounds end in localCheckpoint(eager=
-# False): the fresh plan net_shuffles() sees is a checkpoint scan, so
-# a structural count would read 0 and hide every real per-round
-# exchange behind the lineage cut — record the same -1 sentinel as
-# the eager loops ("iterative; not one plan").
-LINEAGE_CUT = {
-    "graph_pagerank_clicks",
-    "graph_coreness_clicks",
-    "graph_lpa_communities",
-    "text_bpe_merges",  # merge rounds end in localCheckpoint
-    "text_bpe_encode",  # trains its merge table through the same rounds
-}
-
-
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -274,7 +189,6 @@ def main() -> int:
         build(spark, sf_dir).count()
     timings: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
-    shuffles: dict[str, int] = {}
     sgd_iters: dict[str, int | list[int]] = {}
     for name, fn in qs.items():
         if only and name not in only:
@@ -285,15 +199,9 @@ def main() -> int:
             if name in cache_owner:
                 # the owner pays its shared build EVERY run — evict so
                 # best-of-N can't ride a prior run's (or another
-                # query's) warm cache; release the dedup module's
-                # internal persisted intermediates too, or run 1's
-                # shingle blocks warm runs 2..N through CacheManager
-                # plan-matching. In-memory eviction is scoped to THIS
-                # session so a concurrently-live second session's cache
-                # is never degraded; disk-backed kinds (the ingest run)
-                # are process-local tempdirs.
-                evict_cached(cache_owner[name], spark)
-                release_persisted()
+                # query's) warm build. Scoped to THIS session, so a
+                # concurrently live second session is never degraded.
+                cache.evict(cache_owner[name], spark)
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             df.write.mode("overwrite").format("noop").save()
@@ -308,15 +216,6 @@ def main() -> int:
         # consumers in the sweep)
         runs[name] = per_run
         timings[name] = min(per_run)
-        # shuffle count — the scale-relevant plan-shape metric (each net
-        # Exchange is a full network shuffle at cluster scale; broadcast
-        # and reused exchanges don't shuffle). Counted structurally on a
-        # FRESH unexecuted plan via net_shuffles() — see its docstring
-        # for why string-counting the printed plan over-reports.
-        if name in EAGER or name in LINEAGE_CUT:
-            shuffles[name] = -1
-        else:
-            shuffles[name] = net_shuffles(fn(spark, sf_dir))
         if iters_per_run:
             # the SGD stop rule is trajectory-dependent, so a slow SGD
             # time must be attributable to convergence-path variance vs
@@ -328,10 +227,6 @@ def main() -> int:
                 if len(set(iters_per_run)) == 1
                 else iters_per_run
             )
-        # release per-query persisted intermediates (shingle passes) so
-        # cached blocks don't accumulate across the full-registry sweep;
-        # deliberately outside the timed section
-        release_persisted()
         print(f"# {name}: {timings[name]}s", file=sys.stderr)
 
     here = Path(__file__).resolve().parent
@@ -339,9 +234,6 @@ def main() -> int:
     if not only:
         # subset runs write no sidecar: each file describes one
         # full-registry run
-        (here / "bench_shuffles.json").write_text(
-            json.dumps(shuffles, indent=1, sort_keys=True)
-        )
         sidecar_payload = json.dumps(
             {
                 "fresh_total_sec": round(sum(timings.values()), 3),

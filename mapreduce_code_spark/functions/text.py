@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mapreduce_code_spark import cache
 from mapreduce_code_spark.partitioning import spread
 
 # Marker stopwords per language for the n-gram/marker-vote heuristic.
@@ -692,15 +693,13 @@ def bpe_merges(documents: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
     round (``localCheckpoint(eager=False)``) like the graph fixpoints.
     At 100 TB the dictionary still fits executor memory in aggregate;
     nothing in the loop ever re-touches the raw corpus."""
-    from mapreduce_code_spark.operators.dedup import _persist
-
     if n_merges < 1:
         raise ValueError(
             f"n_merges must be >= 1, got {n_merges}: a BPE vocabulary "
             "with zero merge rounds has no merge table to return"
         )
 
-    words = _persist(
+    words = cache.persist(
         documents.select(
             F.explode(
                 F.regexp_extract_all(

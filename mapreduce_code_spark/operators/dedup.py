@@ -34,58 +34,15 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mapreduce_code_spark import cache
 from mapreduce_code_spark.partitioning import spread
 
-# Persisted intermediates (shingle passes) are tracked here so long-lived
-# sessions (bench repeats, notebooks) can release them: Spark's
-# CacheManager holds cached plans until explicit unpersist — they are NOT
-# garbage-collected with the DataFrame handle. Eager unpersist inside the
-# operators would defeat the multi-use persist (the plans are lazy), so
-# the contract is: consume the returned frame, then call
-# ``release_persisted()``. The registry releases automatically at each
-# query build (so external sweeps never accumulate), bench.py and
-# driver_check release between queries, and the list is BOUNDED: beyond
-# ``_PERSISTED_CAP`` live intermediates the oldest are evicted, so even a
-# consumer that never releases leaks a constant number of cached plans.
-_PERSISTED: list[DataFrame] = []
-_PERSISTED_LOCK = threading.Lock()
-_PERSISTED_CAP = 4
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    p = df.persist()
-    with _PERSISTED_LOCK:
-        _PERSISTED.append(p)
-        evicted = _PERSISTED[: -_PERSISTED_CAP] if len(
-            _PERSISTED
-        ) > _PERSISTED_CAP else []
-        del _PERSISTED[: len(evicted)]
-    for old in evicted:
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # owning session already stopped
-    return df
-
-
-def release_persisted() -> int:
-    """Unpersist every intermediate this module has cached; returns how
-    many were released. Safe to call at any time — consumers recompute."""
-    with _PERSISTED_LOCK:
-        drain, _PERSISTED[:] = _PERSISTED[:], []
-    n = 0
-    for df in drain:
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped
-    return n
+# The name perfbench calls: release the per-query intermediates (see
+# cache.release).
+release_persisted = cache.release
 
 
 # ---------------------------------------------------------------- exact
@@ -384,7 +341,7 @@ def ngram_jaccard_pairs(
     # shingle, ``shared`` only the ones with df <= max_df. Persisted: both
     # join sides read the one set build.
     inv = (
-        _persist(doc_shingle_sets(documents, k))
+        cache.persist(doc_shingle_sets(documents, k))
         .select("doc_id", "sz", F.explode("sids").alias("sid"))
         .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("sid")))
         .filter(F.col("df") <= max_df)
@@ -509,7 +466,7 @@ def dup_spans(documents: DataFrame, n: int = 8) -> DataFrame:
         F.col("pos").cast("bigint").alias("pos"),
         _token_hash(F.col("gram")).alias("gid"),
     )
-    pos_grams = _persist(pos_grams)
+    pos_grams = cache.persist(pos_grams)
     dup = (
         pos_grams.groupBy("gid")
         .agg(F.count_distinct("doc_id").alias("nd"))
@@ -580,7 +537,7 @@ def near_dup_pairs_scalable(
     exact (every emitted pair's jaccard is true and >= threshold), recall
     is the LSH band recall.
     """
-    sets = _persist(doc_shingle_sets(documents, k))
+    sets = cache.persist(doc_shingle_sets(documents, k))
     cand = minhash_lsh_pairs(documents, n_hashes, band_size, k, sets=sets)
     return _exact_rerank(
         cand, sets, sets, ("doc_a", "size_a"), ("doc_b", "size_b"), threshold
@@ -614,11 +571,11 @@ def incremental_near_dups(
     streamed foreachBatch twin), so the corpus-side shingle pass runs
     once, not once per shard.
     """
-    new_sets = _persist(doc_shingle_sets(new_docs, k))
+    new_sets = cache.persist(doc_shingle_sets(new_docs, k))
     corp_sets = (
         corpus_sets
         if corpus_sets is not None
-        else _persist(doc_shingle_sets(corpus_docs, k))
+        else cache.persist(doc_shingle_sets(corpus_docs, k))
     )
     nb = band_keys(new_sets, n_hashes, band_size)
     cb = band_keys(corp_sets, n_hashes, band_size)

@@ -53,7 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mapreduce_code_spark.operators.dedup import _persist
+from mapreduce_code_spark import cache
 from mapreduce_code_spark.operators.sampling import key_bucket, _bucket_sql
 
 SCALE = 1_000_000_000_000  # rank quantization: 1e-12 resolution
@@ -162,27 +162,27 @@ def pagerank(
     # The edge/node/degree frames are re-read every iteration (e twice:
     # contribution join + dangling anti-join feedstock) — persist them
     # once instead of re-deriving the upstream pipeline 2·n_iter times.
-    # Tracked in dedup's bounded _PERSISTED registry, so the registry /
-    # bench / driver_check release them between queries like every other
-    # shared materialization. The cache is hash-partitioned on the
-    # contribution join's key (src) BEFORE persisting: one extra exchange
-    # at build time, and every iteration's edge-side join then reuses the
-    # cached partitioning instead of re-shuffling the edge list n_iter
-    # times — the dominant per-iteration cost at real edge counts. The
-    # in-partition sort likewise lets a sort-merge join reuse the cached
-    # ordering instead of re-sorting the edge cache every round.
-    e = _persist(
+    # They are per-query intermediates, released when the next query is
+    # built, so they never accumulate across queries. The cache is
+    # hash-partitioned on the contribution join's key (src) BEFORE
+    # persisting: one extra exchange at build time, and every
+    # iteration's edge-side join then reuses the cached partitioning
+    # instead of re-shuffling the edge list n_iter times — the dominant
+    # per-iteration cost at real edge counts. The in-partition sort
+    # likewise lets a sort-merge join reuse the cached ordering instead
+    # of re-sorting the edge cache every round.
+    e = cache.persist(
         edges.select("src", "dst")
         .distinct()
         .repartition("src")
         .sortWithinPartitions("src")
     )
-    nodes = _persist(
+    nodes = cache.persist(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    deg = _persist(e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
+    deg = cache.persist(e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
     n_row = nodes.agg(F.count(F.lit(1)).alias("n"))
 
     r = nodes.crossJoin(F.broadcast(n_row)).select(
@@ -296,8 +296,8 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     # deg feeds both endpoint joins and the final output; o feeds three
     # consumers — persist all three or the whole click_edges derivation
     # (events scan + user window + distinct + md5 filter) re-runs ~5x
-    und = _persist(_undirected(edges))
-    deg = _persist(
+    und = cache.persist(_undirected(edges))
+    deg = cache.persist(
         und.select(F.col("a").alias("node"))
         .union(und.select(F.col("b").alias("node")))
         .groupBy("node")
@@ -312,15 +312,14 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     a_first = F.col("deg_a") <= F.col("deg_b")
     # The oriented edge cache is hash-partitioned (and sorted) on the
     # wedge join's key BEFORE persisting — the same device as
-    # pagerank's src-partitioned edge cache (r18; this kernel was the
-    # one graph cache persisted unpartitioned): the wedge self-join's
+    # pagerank's src-partitioned edge cache: the wedge self-join's
     # two scans of o carry distinct attribute ids, so WITHOUT the
     # pre-partitioning EnsureRequirements shuffled BOTH sides on u
     # (edge-pair-scale exchanges — the plan's two biggest); with it,
     # the two cache scans are co-partitioned on the join key and the
     # wedge join runs exchange-free. One build-time exchange replaces
     # two per-read exchanges of the same frame.
-    o = _persist(
+    o = cache.persist(
         j.select(
             F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
             F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
@@ -425,7 +424,7 @@ def coreness(edges: DataFrame, n_rounds: int = 8) -> DataFrame:
     # cache hash-partitioned on the per-round join key (nbr): one build
     # exchange buys back an adjacency re-shuffle every round (cf. the
     # same device on pagerank's edge cache)
-    adj = _persist(
+    adj = cache.persist(
         und.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
         .union(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
         .repartition("nbr")
@@ -510,7 +509,7 @@ def lpa_communities(edges: DataFrame, n_rounds: int = 4) -> DataFrame:
         .union(und.select(F.col("b").alias("node")))
         .distinct()
     )
-    adj = _persist(
+    adj = cache.persist(
         und.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
         .union(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
         .union(nodes.select("node", F.col("node").alias("nbr")))  # self-vote

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mapreduce_code_spark import cache
 from mapreduce_code_spark.partitioning import spread
 
 
@@ -733,13 +734,10 @@ def semantic_dedup(embeddings: DataFrame, threshold: float = 0.9) -> DataFrame:
     """
     # scored is consumed three times (both sides of the domination join
     # and the final flag join); without a persist each action re-scans
-    # the corpus and re-aggregates the centroids 3×. Tracked through the
-    # dedup module's persist list, which the registry/bench/driver_check
-    # all release after every query build.
-    from mapreduce_code_spark.operators.dedup import _persist
-
+    # the corpus and re-aggregates the centroids 3×. A per-query
+    # intermediate: released when the next query is built.
     cents = _centroid_vectors(embeddings)
-    scored = _persist(
+    scored = cache.persist(
         spread(embeddings)
         .join(F.broadcast(cents), F.col("label") == F.col("c_label"))
         .select(

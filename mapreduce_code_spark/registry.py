@@ -21,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_code_spark import cache
 from mapreduce_code_spark.operators import frequent, regression, rules
 from mapreduce_code_spark.rotation import ROUND_FIRST, ROUND_LAST
 from mapreduce_code_spark.plans import prep
@@ -40,15 +41,12 @@ def register(name: str, oracle: str | None = None):
 
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # Release the PREVIOUS query's cached dedup intermediates at
-            # each build: a sequential sweep (the round driver, any
-            # notebook) has consumed them by the time it builds the next
-            # query, so the contract no longer depends on every harness
-            # knowing the dedup module's global. Harmless mid-use — a
-            # released persist recomputes, never corrupts.
-            from mapreduce_code_spark.operators.dedup import release_persisted
-
-            release_persisted()
+            # Each build is the query boundary: a sequential caller has
+            # consumed the previous query by the time it builds the
+            # next, so its intermediates are released here and no caller
+            # has to release anything. Harmless mid-use — a released
+            # persist recomputes, never corrupts.
+            cache.release()
             return fn(spark, sf_dir)
 
         _QUERIES[name] = wrapped
@@ -84,70 +82,11 @@ def oracle_sql() -> dict[str, str]:
     return _ordered(_ORACLES)
 
 
-# Per-(kind, session, sf_dir) persisted materializations shared across
-# registered queries, e.g. the Apriori transactions prep (the reference's
-# own cross-job HBase cache, done Spark-style with persist()) and the
-# near-dup pairs frame that dedup_near_dup_scalable and
-# dedup_components_starcontract read: identical input is materialized
-# once per session, never once per consumer.
-_DF_CACHE: dict[tuple[str, int, str], DataFrame] = {}
-
-
-def _cached_df(kind: str, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    """Persisted DataFrame per (kind, session, sf_dir). Keyed by the live
-    session: a cached DataFrame is bound to the session that built it,
-    and handing it to a restarted session would fail."""
-    key = (kind, id(spark), sf_dir)
-    # validate on HIT too: id() can be reused after a stopped session is
-    # garbage-collected, so the key alone can't prove the cached frame
-    # belongs to THIS session
-    hit = _DF_CACHE.get(key)
-    if hit is not None and hit.sparkSession is spark:
-        return hit
-    # Evict only entries we can prove are stale: THIS key's invalid entry
-    # (id-reuse case) and entries whose owning session has stopped. A
-    # CONCURRENTLY LIVE second session's cache must be left alone
-    # (unpersisting it would silently degrade that session mid-use), and
-    # this session's OTHER entries stay warm — a sweep alternating
-    # sf dirs must not thrash the materializations.
-    for k, df in list(_DF_CACHE.items()):
-        owner = df.sparkSession
-        owner_stopped = True
-        try:
-            jsc = getattr(owner, "_jsc", None)
-            if jsc is None:
-                # no JVM handle to probe (e.g. Spark Connect) — cannot
-                # prove it stopped, so treat as live and leave it alone
-                owner_stopped = False
-            else:
-                owner_stopped = jsc.sc().isStopped()
-        except Exception:
-            pass  # probe failed on a classic session ⇒ stopped
-        if k == key or owner_stopped:
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # owning session already stopped
-            del _DF_CACHE[k]
-    # Liveness can't be proven for Connect sessions (no _jsc probe), so
-    # bound the cache: beyond 8 entries evict oldest-inserted first —
-    # session churn then costs a recompute, never unbounded growth.
-    while len(_DF_CACHE) >= 8:
-        k, df = next(iter(_DF_CACHE.items()))
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-        del _DF_CACHE[k]
-    _DF_CACHE[key] = build().persist()
-    return _DF_CACHE[key]
-
-
 def _transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transactions view, persisted per (session, sf_dir) — the Apriori
     queries share one materialization instead of re-running the
     lineitem⋈part prep."""
-    return _cached_df(
+    return cache.shared(
         "transactions",
         spark,
         sf_dir,
@@ -372,10 +311,10 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_near_dup_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-path near-dup: LSH candidates + exact Jaccard rerank.
     Routed through the shared ``_near_dup_pairs`` materialization (it IS
-    that computation) so this query, as the cache's bench OWNER, re-
-    registers the ``_DF_CACHE`` entry its eviction dropped; a cache
-    owner that bypassed it would leave the entry cold for every consumer
-    sweeping later in the rotation order."""
+    that computation) so this query, as the build's bench OWNER, re-
+    registers the shared frame its eviction dropped; an owner that
+    bypassed it would leave the build cold for every consumer sweeping
+    later in the rotation order."""
     return _near_dup_pairs(spark, sf_dir)
 
 
@@ -400,7 +339,7 @@ def _corpus_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     time, reused for every later ingest check"), so sharing it across the
     two ingest-demo queries is the honest shape, not a bench shortcut;
     the streamed row owns the build under bench attribution."""
-    return _cached_df(
+    return cache.shared(
         "corpus_shingles",
         spark,
         sf_dir,
@@ -438,8 +377,9 @@ def q_streamed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every micro-batch reuses them instead of re-shingling the static
     # corpus per batch (the "computed once at acceptance time" shape);
     # shared with the batch twin via _corpus_shingles (this row owns
-    # the build under bench attribution), _DF_CACHE-persisted so the
-    # per-query release_persisted() drain doesn't evict it mid-sweep
+    # the build under bench attribution); a shared build, not a
+    # per-query intermediate, so the release at each query build
+    # leaves it warm for the rest of the sweep
     corp_sets = _corpus_shingles(spark, sf_dir)
     # materialize BEFORE entering the stream_partitions(8) override, so
     # the cached layout is always the session conf's — the same as the
@@ -476,7 +416,7 @@ def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs row and the components row consume the IDENTICAL pair set,
     so the full shingles→LSH→rerank pipeline materializes once, not
     once per consumer."""
-    return _cached_df(
+    return cache.shared(
         "near_dup_pairs",
         spark,
         sf_dir,
@@ -652,13 +592,12 @@ def q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained BPE merge table, persisted per (session, sf_dir) —
-    text_bpe_merges RETURNS it and text_bpe_encode APPLIES it, and
-    re-running the 8 training rounds for each was the #3 bench cost
-    (r6 verdict #4: ~2 s of duplicated work per sweep). Same shared-
+    text_bpe_merges RETURNS it and text_bpe_encode APPLIES it, so the 8
+    training rounds run once per session, not once per row. Same shared-
     materialization mechanism as the Apriori transactions prep and the
     near-dup pairs frame; the cached frame is merge-table-sized (one
     row per rule), not corpus-sized."""
-    return _cached_df(
+    return cache.shared(
         "bpe_merges",
         spark,
         sf_dir,
@@ -726,134 +665,69 @@ def q_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return PIPE.training_manifest(load_table(spark, sf_dir, "documents"))
 
 
-# Process-cached n-file stream sources for the two streamed ingest
-# rows, keyed by (sf_dir, n_files) (ADVICE r7, low): the split is a
-# pure function of the documents table content (see write_ingest_split),
-# so rebuilding it per invocation wasted ~1 s/repeat at bench sf0.1.
-# Only the read-only source files are cached — every call still runs a
-# fresh checkpoint, staging area, and shard write, so the streamed path
-# itself is never shortcut. Plain dirs on disk (no session affinity),
-# reaped at exit. Both rows read the SAME 3-file split: three
-# micro-batches is the minimum where compact_every=1 genuinely folds
-# committed history (batch 2 folds batches 0-1).
-_INGEST_SPLITS: dict[tuple[str, int], str] = {}
-
-
-def _ingest_split_src(
-    spark: SparkSession, sf_dir: str, n_files: int = 3
-) -> str:
+# The 3-file stream source both streamed ingest rows read, one per
+# sf_dir: the split is a pure function of the documents table (see
+# write_ingest_split), so it is written once. Only the read-only source
+# is shared — every call still runs a fresh checkpoint, staging area and
+# shard write, so the streamed path itself is never shortcut. Three
+# files is the fewest micro-batches in which compact_every=1 genuinely
+# folds committed history (batch 2 folds batches 0-1).
+def _ingest_split_src(spark: SparkSession, sf_dir: str) -> str:
     import glob
 
-    from mapreduce_code_spark.scratch import scratch_dir
-
-    src = _INGEST_SPLITS.get((sf_dir, n_files))
-    # validate on hit: an exit-reaped or externally cleaned dir rebuilds
-    if src is not None and len(glob.glob(f"{src}/f*.parquet")) == n_files:
+    def build(base: str) -> str:
+        src = f"{base}/src"
+        PIPE.write_ingest_split(
+            load_table(spark, sf_dir, "documents"), src, n_files=3
+        )
         return src
-    # tmpfs scratch since r17 (r16 verdict #6 named this site; the
-    # deferral note said "r18 when the ingest rows are stale-due", but
-    # the r17 optimization measurements made the move urgent: the
-    # OWNER row pipeline_ingest_hash_log is the #1 bench floor and its
-    # whole timed path — split read, staging parquet writes, checkpoint
-    # commits, compaction rewrites — committed to the root disk, the
-    # exact mechanism the r16 probe showed the driver window inflates.
-    # Coverage argued via the full-registry driver_check sweep (the
-    # session.py precedent in rotation.py) plus a scoped post-change
-    # driver_check of both ingest rows; scratch_dir honors
-    # SPARK_GRAFT_DISK_LOCAL=1 for blowup-tier probes and sweeps the
-    # dir at exit.
-    base = scratch_dir("spark_graft_split_")
-    src = f"{base}/src"
-    PIPE.write_ingest_split(
-        load_table(spark, sf_dir, "documents"), src, n_files=n_files
+
+    return cache.on_disk(
+        "ingest_split",
+        sf_dir,
+        build,
+        lambda src: len(glob.glob(f"{src}/f*.parquet")) == 3,
     )
-    _INGEST_SPLITS[(sf_dir, n_files)] = src
-    return src
 
 
-# One completed streamed-ingest RUN shared by the two ingest rows (r9
-# verdict #3): both queries drove byte-identical 3-micro-batch
-# compact_every=1 checkpointed runs over the same cached 3-file split —
-# the #2 cost block after streams (6.8 s combined floor) for one run's
-# worth of evidence. The run is a pure function of the corpus (the
-# batching-invariance + determinism tests pin exactly that), so it
-# materializes ONCE per sf_dir; each row still reads its OWN output
+# One completed streamed-ingest RUN shared by the two ingest rows: both
+# would drive byte-identical 3-micro-batch compact_every=1 checkpointed
+# runs over the same split. The run is a pure function of the corpus
+# (the batching-invariance and determinism tests pin exactly that), so
+# it is built once per sf_dir; each row still reads its OWN output
 # (chunks → manifest rank, hashes → ledger with the compaction guard at
-# the READ) against its full end-to-end oracle. Bench attribution: the
-# run is a SHARED_BUILDS entry owned by pipeline_ingest_hash_log — the
-# owner pays the cold streamed run every timed repeat (evict_cached
-# deletes the run dir), the manifest row rides warm. Plain dirs on disk
-# (no session affinity), reaped at exit.
-# sf_dir -> (run base dir, staging dir): the base is stored explicitly
-# so eviction never has to re-derive it from _stream_ingest's internal
-# layout (review finding: an rsplit reconstruction would silently
-# delete the wrong dir — and leave the real run warm, turning the
-# owner's "cold" floor into a cache artifact — if that layout ever
-# deepened).
-_INGEST_RUNS: dict[str, tuple[str, str]] = {}
-
-
+# the read) against its full end-to-end oracle. The run is the
+# SHARED_BUILDS entry owned by pipeline_ingest_hash_log, so that row
+# pays the cold streamed run on every timed repeat. Returns the staging
+# dir.
 def _ingest_run_staging(spark: SparkSession, sf_dir: str) -> str:
     import glob
 
-    from mapreduce_code_spark.scratch import discard, scratch_dir
     from mapreduce_code_spark.streaming.windows import stream_partitions
 
-    hit = _INGEST_RUNS.get(sf_dir)
-    # validate on hit: an exit-reaped, evicted, or externally cleaned
-    # dir rebuilds (3 chunk batches + a compacted hash partition are the
-    # run's completion signature)
-    if hit is not None:
-        old_base, staging = hit
-        if (
-            len(glob.glob(f"{staging}/chunks/batch_id=*")) >= 3
-            and glob.glob(f"{staging}/hashes/batch_id=-*")
-        ):
-            return staging
-        # half-valid remnant: reap it rather than abandoning it to the
-        # atexit hook (review finding); discard() because the base is a
-        # tracked scratch dir since r17
-        del _INGEST_RUNS[sf_dir]
-        discard(old_base)
-    # tmpfs scratch since r17, same rationale as _ingest_split_src
-    # above: the streamed run under this dir (staging sinks, stream
-    # checkpoint, shard writes) IS pipeline_ingest_hash_log's timed
-    # path — the heaviest bench floor — and every one of its small
-    # fsync'd commits previously landed on the contended root disk.
-    base = scratch_dir("spark_graft_ingestrun_")
-    # n_shards(=8) state/shuffle partitions for the run (r9 A/B, SURVEY
-    # §9): the per-micro-batch keeper window + anti-join and the final
-    # shard write are test-corpus-sized, where per-partition overhead
-    # dominates at the session's 32; the floor is n_shards because
-    # write_shuffled's one-task-per-shard layout needs that many.
-    with stream_partitions(PIPE.TRAIN_SHARDS):
-        staging = PIPE._stream_ingest(
-            load_table(spark, sf_dir, "documents"),
-            base,
-            src=_ingest_split_src(spark, sf_dir),
-            n_files=3,
-            compact_every=1,
+    def build(base: str) -> str:
+        # TRAIN_SHARDS state/shuffle partitions: the per-micro-batch
+        # keeper window, anti-join and final shard write are small at
+        # test corpus sizes, so per-partition overhead dominates at the
+        # session default; and write_shuffled's one-task-per-shard
+        # layout needs at least TRAIN_SHARDS
+        with stream_partitions(PIPE.TRAIN_SHARDS):
+            return PIPE._stream_ingest(
+                load_table(spark, sf_dir, "documents"),
+                base,
+                src=_ingest_split_src(spark, sf_dir),
+                n_files=3,
+                compact_every=1,
+            )
+
+    def complete(staging: str) -> bool:
+        # 3 chunk batches plus a compacted (negative-id) hash partition
+        # are a finished run's signature
+        return len(glob.glob(f"{staging}/chunks/batch_id=*")) >= 3 and bool(
+            glob.glob(f"{staging}/hashes/batch_id=-*")
         )
-    _INGEST_RUNS[sf_dir] = (base, staging)
-    return staging
 
-
-def _evict_ingest_runs() -> None:
-    """Forget (and delete) every cached streamed-ingest run — bench.py's
-    eviction hook so the owner row's timed runs always pay the cold
-    streamed path. The run dirs are PROCESS-local (each process mkdtemps
-    its own), so unlike the in-memory cache there is no cross-session
-    scoping question a concurrent second process could lose: deleting
-    ours never touches another process's run."""
-    from mapreduce_code_spark.scratch import discard
-
-    for sf_dir, (base, _staging) in list(_INGEST_RUNS.items()):
-        # discard (not a raw rmtree): the run base is a tracked scratch
-        # dir since r17, and discard keeps it on the exit re-sweep list
-        # in case the just-terminated stream's state-store maintenance
-        # recreates files under it
-        discard(base)
-        del _INGEST_RUNS[sf_dir]
+    return cache.on_disk("ingest_run", sf_dir, build, complete)
 
 
 @register(
@@ -872,8 +746,8 @@ def q_ingest_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares pipeline_materialize_manifest's DuckDB oracle — a hash match
     here pins the whole ingest chain, cross-batch dedup AND mid-ingest
     compaction included, to the batch semantics. The run itself is the
-    shared per-corpus materialization (see _ingest_run_staging — r9
-    verdict #3); this row ranks the run's staged chunks fresh."""
+    shared per-corpus materialization (see _ingest_run_staging); this
+    row ranks the run's staged chunks fresh."""
     return PIPE.manifest_from_staging(
         spark, _ingest_run_staging(spark, sf_dir)
     )
@@ -898,21 +772,10 @@ def q_ingest_hash_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Process-cached materialized training set for q_epoch_manifest, keyed
-# by sf_dir — the same pattern (and rationale) as _INGEST_SPLITS above:
-# the written shards are a pure function of the documents table content
-# (materialize_training_set is deterministic end to end, and the
-# manifest≡written-file-order test pins exactly that), so the epoch-flip
-# query only needs them built ONCE per corpus. The flip itself — the op
-# under test — runs fresh every call over the cached shards. Plain dirs
-# on disk (no session affinity), reaped at exit.
-_EPOCH_SHARDS: dict[str, str] = {}
-
-# The registered epoch flip re-ranks at this salt; must differ from
-# pipeline.TRAIN_SALT (the written epoch) or the reshuffle is vacuous —
-# guarded HERE at import so the misconfiguration can't survive to
-# runtime (a bare assert in the query fn is stripped under python -O;
-# round-7 advisor item).
+# The registered epoch flip re-ranks at this salt; it must differ from
+# pipeline.TRAIN_SALT (the written epoch) or the reshuffle is vacuous.
+# Checked at import, so the misconfiguration cannot reach a run (an
+# assert in the query fn would be stripped under python -O).
 EPOCH_SALT = "epoch1"
 if EPOCH_SALT == PIPE.TRAIN_SALT:
     raise ValueError(
@@ -922,25 +785,27 @@ if EPOCH_SALT == PIPE.TRAIN_SALT:
     )
 
 
+# The epoch-0 training shards the epoch flip rewrites, one set per
+# sf_dir: materialize_training_set is deterministic end to end (the
+# manifest≡written-file-order test pins it), so the shards are a pure
+# function of the documents table and are written once. The flip
+# itself — the op under test — runs fresh every call.
 def _epoch_shards_src(spark: SparkSession, sf_dir: str) -> str:
     import glob
 
-    from mapreduce_code_spark.scratch import scratch_dir
-
-    out = _EPOCH_SHARDS.get(sf_dir)
-    # validate on hit: an exit-reaped or externally cleaned dir rebuilds
-    if out is not None and len(glob.glob(f"{out}/shard=*")) == PIPE.TRAIN_SHARDS:
+    def build(base: str) -> str:
+        out = f"{base}/shards"
+        PIPE.materialize_training_set(
+            load_table(spark, sf_dir, "documents"), out
+        )
         return out
-    # scratch_dir (tmpfs-backed, exit-swept) instead of a raw mkdtemp:
-    # one of the four leaked-/tmp tempdir sites named by r16 verdict #6
-    # — and parquet reads of the cached shards stop touching the root
-    # disk the driver window contends (SPARK_GRAFT_DISK_LOCAL=1 opts
-    # blowup-tier probes back onto disk)
-    base = scratch_dir("spark_graft_shards_")
-    out = f"{base}/shards"
-    PIPE.materialize_training_set(load_table(spark, sf_dir, "documents"), out)
-    _EPOCH_SHARDS[sf_dir] = out
-    return out
+
+    return cache.on_disk(
+        "epoch_shards",
+        sf_dir,
+        build,
+        lambda out: len(glob.glob(f"{out}/shard=*")) == PIPE.TRAIN_SHARDS,
+    )
 
 
 @register(
@@ -1530,14 +1395,14 @@ from mapreduce_code_spark.operators import graph as GR  # noqa: E402
 
 def _click_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sparsified page-transition edge list, persisted per
-    (session, sf_dir) — the four graph queries' common INPUT (the
-    transactions-prep precedent, r3 verdict #4 / r8 SHARED_BUILDS): one
+    (session, sf_dir) — the four graph queries' common INPUT (a
+    SHARED_BUILDS entry, like the transactions prep): one
     user_id-window shuffle + distinct + hash sparsification that every
     graph query was rebuilding identically. Node-scale small (~2k
     edges at sf0.1); each consumer still derives its own projection
     (pagerank re-partitions by src, triangles/coreness project
     undirected) — only the shared scan+window+distinct is cached."""
-    return _cached_df(
+    return cache.shared(
         "click_edges",
         spark,
         sf_dir,
@@ -1692,53 +1557,20 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     return GR.lpa_communities(_click_edges(spark, sf_dir))
 
 
-def evict_cached(kind: str, spark: SparkSession | None = None) -> None:
-    """Drop the ``kind`` shared materialization — ``_DF_CACHE`` entries
-    (unpersisted) or, for disk-backed kinds, the cached run dirs — so a
-    benchmark can force the next consumer to pay the build. Harmless
-    mid-use: an evicted persist/dir recomputes, never corrupts.
-
-    ``spark`` scopes the in-memory eviction to frames OWNED by that
-    session (r9 advisor, low): ``_cached_df`` deliberately never touches
-    a concurrently-live second session's cache, and an unscoped eviction
-    from a bench running beside another live session would silently
-    degrade that session mid-use. ``None`` keeps the old evict-all
-    behavior for single-session callers."""
-    if kind in _DISK_EVICTORS:
-        _DISK_EVICTORS[kind]()
-        return
-    for k, df in list(_DF_CACHE.items()):
-        if k[0] != kind:
-            continue
-        if spark is not None and df.sparkSession is not spark:
-            continue
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-        del _DF_CACHE[k]
+# The name perfbench calls: drop one shared build (see cache.evict).
+evict_cached = cache.evict
 
 
-# kind -> zero-arg evictor for shared builds that live on DISK rather
-# than in _DF_CACHE (the streamed-ingest run): same bench contract —
-# evicting before a timed owner run forces the cold build.
-_DISK_EVICTORS: dict[str, Callable[[], None]] = {
-    "ingest_run": _evict_ingest_runs,
-}
-
-
-# Deterministic benchmark attribution for the shared in-session
-# materializations (r8 verdict #3: min-of-N plus order-dependent cache
-# warming meant a shared build landed in whichever query the round's
-# rotation happened to run first — floors flapped across rounds, and a
-# cold first run read as per-query "contention"). Each shared cache has
-# ONE fixed owner query: bench.py evicts the cache before every timed
-# run of the owner (the owner ALWAYS pays the build, min-of-N stays
-# min-of-cold) and prewarms it before the sweep so every other consumer
-# ALWAYS rides it. The CONSUMERS set names every registered query that
-# can touch the cache (r9 advisor, low): a subset bench run prewarms
-# only the builds its selected queries actually reach, instead of
-# paying tens of seconds of unrelated materialization per invocation.
+# Deterministic benchmark attribution for the shared builds. With
+# best-of-N timing and order-dependent warming, a shared build would
+# land in whichever consumer happened to run first, and its time would
+# move between rows from run to run. So each shared build has ONE fixed
+# owner query: a benchmark evicts the build before every timed run of
+# the owner (the owner always pays the build, best-of-N stays
+# best-of-cold) and prewarms it before the sweep, so every other
+# consumer always rides it warm. The consumers set names every
+# registered query that can touch the build, so a subset run prewarms
+# only the builds its selected queries reach.
 # kind -> (owner query name, builder fn(spark, sf_dir), consumers).
 SHARED_BUILDS: dict[str, tuple[str, Callable, frozenset[str]]] = {
     # the Apriori family's lineitem⋈part transactions prep
@@ -1792,7 +1624,7 @@ SHARED_BUILDS: dict[str, tuple[str, Callable, frozenset[str]]] = {
         _corpus_shingles,
         frozenset({"dedup_incremental", "dedup_streamed_incremental"}),
     ),
-    # the completed 3-micro-batch streamed-ingest run (r9 verdict #3):
+    # the completed 3-micro-batch streamed-ingest run (on disk):
     # the ledger row owns (and re-pays) the actual streamed path; the
     # manifest row ranks the staged chunks warm. The builder returns the
     # ledger frame so bench's .count() prewarm has something cheap to
@@ -1806,12 +1638,21 @@ SHARED_BUILDS: dict[str, tuple[str, Callable, frozenset[str]]] = {
     ),
 }
 
+
+def evict_all(spark: SparkSession) -> None:
+    """Evict every shared build of ``spark`` and the intermediates, so
+    the next query is built and planned as if it ran first. Source
+    fixtures stay: they are inputs, not work a query does."""
+    for kind in SHARED_BUILDS:
+        cache.evict(kind, spark)
+
+
 # Shared on-disk SOURCE FIXTURES — inputs the registered queries are
-# DEFINED over (an already-materialized epoch-0; the n-file ingest
-# split), not work the queries claim to do. bench.py builds them once,
-# untimed, before the sweep, so no query's floor silently carries a
-# fixture build depending on rotation order; subset runs build only the
-# fixtures their selected queries consume (r9 advisor, low).
+# DEFINED over (an already-materialized epoch-0; the 3-file ingest
+# split), not work the queries claim to do. A benchmark builds them
+# once, untimed, before the sweep, so no query's time carries a fixture
+# build that depends on sweep order; a subset run builds only the
+# fixtures its selected queries consume.
 # (fn(spark, sf_dir) -> path, consumer query names).
 SOURCE_FIXTURES: list[tuple[Callable, frozenset[str]]] = [
     (

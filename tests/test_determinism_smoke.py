@@ -33,28 +33,19 @@ SMOKE = [
 ]
 
 
-def _evict_everything(spark):
-    """Drop EVERY shared cache between the two runs: a persisted
-    shared build (e.g. graph_pagerank_clicks' click_edges frame) would
-    otherwise hand run 2 the cached blocks of exactly the stage whose
-    run-to-run determinism this module exists to check (review
-    finding: the check was vacuous for shared-build owners)."""
-    from mapreduce_code_spark.operators.dedup import release_persisted
-
-    for kind in registry.SHARED_BUILDS:
-        registry.evict_cached(kind, spark)
-    release_persisted()
-
-
 @pytest.mark.parametrize("name", SMOKE)
 def test_double_run_is_bitwise_identical(spark, sf_dir, name):
     fn = registry.queries()[name]
+    # every shared build is evicted between the runs: a live one (e.g.
+    # graph_pagerank_clicks' click_edges frame) would hand run 2 the
+    # cached blocks of exactly the stage whose run-to-run determinism
+    # this checks
     try:
-        _evict_everything(spark)
+        registry.evict_all(spark)
         first = normalize_exact(fn(spark, sf_dir).toPandas())
-        _evict_everything(spark)
+        registry.evict_all(spark)
         second = normalize_exact(fn(spark, sf_dir).toPandas())
     finally:
-        _evict_everything(spark)
+        registry.evict_all(spark)
     assert len(first), f"vacuous: {name} returned no rows"
     pd.testing.assert_frame_equal(first, second, check_exact=True)

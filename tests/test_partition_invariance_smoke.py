@@ -42,14 +42,6 @@ SMOKE = [
 ]
 
 
-def _evict_everything(spark):
-    from mapreduce_code_spark.operators.dedup import release_persisted
-
-    for kind in registry.SHARED_BUILDS:
-        registry.evict_cached(kind, spark)
-    release_persisted()
-
-
 @pytest.mark.parametrize("name", SMOKE)
 def test_values_survive_shuffle_width_change(spark, sf_dir, name):
     from driver_check import frames_match, normalize
@@ -58,14 +50,14 @@ def test_values_survive_shuffle_width_change(spark, sf_dir, name):
     base = spark.conf.get("spark.sql.shuffle.partitions")
     alt = "7" if base != "7" else "11"
     try:
-        _evict_everything(spark)
+        registry.evict_all(spark)
         at_base = normalize(fn(spark, sf_dir).toPandas())
         spark.conf.set("spark.sql.shuffle.partitions", alt)
-        _evict_everything(spark)
+        registry.evict_all(spark)
         at_alt = normalize(fn(spark, sf_dir).toPandas())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", base)
-        _evict_everything(spark)
+        registry.evict_all(spark)
     assert len(at_base), f"vacuous: {name} returned no rows"
     status = frames_match(at_base, at_alt)
     assert status == "OK", f"{name} at shuffle.partitions {alt}: {status}"

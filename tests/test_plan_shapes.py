@@ -146,11 +146,13 @@ def test_hybrid_rrf_plans_five_net_exchanges(spark, sf_dir):
     repartition(query_id) serving both count and rank). A full-outer-
     join fusion planned 11."""
     from mapreduce_code_spark.operators import similarity
+    from mapreduce_code_spark.registry import evict_all
 
-    # projections, so no registry cache over the bare tables is
-    # substituted into these plans (see the near-dup pin below)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    # no shared build left live by an earlier test may be substituted
+    # into these plans (see the near-dup pin below)
+    evict_all(spark)
+    docs = load_table(spark, sf_dir, "documents")
+    emb = load_table(spark, sf_dir, "embeddings")
     assert _net_exchanges(similarity.keyword_ranked(docs)) == 3
     assert _net_exchanges(similarity.hybrid_rrf(docs, emb)) == 5
 
@@ -177,12 +179,15 @@ def test_near_dup_kernels_read_one_shingle_set_per_doc(spark, sf_dir):
     set replaced printed 17, 16 and 16."""
     from pyspark.sql import functions as F
 
+    from mapreduce_code_spark import cache
     from mapreduce_code_spark.operators import dedup
+    from mapreduce_code_spark.registry import evict_all
 
-    # the projection keeps these plans apart from the registry's session-
-    # wide caches over the same table (the near-dup pairs, the corpus
-    # sets), which Spark would otherwise substitute into them
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    # Spark substitutes any live cache over the same table into these
+    # plans, so the session's shared builds (the near-dup pairs, the
+    # corpus sets) left by earlier tests are evicted first
+    evict_all(spark)
+    docs = load_table(spark, sf_dir, "documents")
     builds = {
         "ngram": lambda: dedup.ngram_jaccard_pairs(docs, threshold=0.2),
         "scalable": lambda: dedup.near_dup_pairs_scalable(docs),
@@ -195,9 +200,9 @@ def test_near_dup_kernels_read_one_shingle_set_per_doc(spark, sf_dir):
     for name, build in builds.items():
         # released per kernel: a live cached set would be substituted
         # into the next kernel's plan
-        dedup.release_persisted()
+        cache.release()
         got[name] = _net_exchanges(build())
-    dedup.release_persisted()
+    cache.release()
     assert got == {"ngram": 7, "scalable": 9, "incremental": 9}
 
 

@@ -113,23 +113,24 @@ def test_shared_build_consumers_name_registered_queries():
 
 
 def test_bench_query_sets_name_registered_queries():
-    """bench.py special-cases queries by name (SGD iteration counts, the
-    -1 shuffle sentinel for eager and lineage-cut rows) — a stale name
-    there silently special-cases nothing, so every name must be a
+    """bench.py (SGD iteration counts) and tools/plan_report.py (the
+    eager and lineage-cut notes) special-case queries by name — a stale
+    name there silently special-cases nothing, so every name must be a
     registered query."""
     import sys
 
     sys.path.insert(0, str(ROOT))
     import bench
     from mapreduce_code_spark import registry
+    from tools import plan_report
 
     reg = set(registry.queries())
     for label, names in (
-        ("SGD_LINKS", set(bench.SGD_LINKS)),
-        ("EAGER_STREAMS", bench.EAGER_STREAMS),
-        ("EAGER_LOOPS", bench.EAGER_LOOPS),
-        ("EAGER_WRITES", bench.EAGER_WRITES),
-        ("LINEAGE_CUT", bench.LINEAGE_CUT),
+        ("bench.SGD_LINKS", set(bench.SGD_LINKS)),
+        ("plan_report.EAGER_STREAMS", plan_report.EAGER_STREAMS),
+        ("plan_report.EAGER_LOOPS", plan_report.EAGER_LOOPS),
+        ("plan_report.EAGER_WRITES", plan_report.EAGER_WRITES),
+        ("plan_report.LINEAGE_CUT", plan_report.LINEAGE_CUT),
     ):
         unknown = sorted(names - reg)
-        assert not unknown, f"bench.{label} names unregistered: {unknown}"
+        assert not unknown, f"{label} names unregistered: {unknown}"

@@ -551,7 +551,7 @@ def test_monitoring_fact_table_never_shuffles(spark, sf_dir):
     """The z-score scorer's only exchange is the tiny stats aggregate:
     the event scan itself reaches the output through a broadcast join,
     so at 100 TB the monitor costs one map-side-combined pass."""
-    from bench import net_shuffles
+    from tools.plan_report import net_shuffles
     from mapreduce_code_spark.operators import monitoring as MON
     from mapreduce_code_spark.sources.io import load_table
 
@@ -562,7 +562,7 @@ def test_monitoring_fact_table_never_shuffles(spark, sf_dir):
 def test_retention_copartitions_on_user(spark, sf_dir):
     """Retention: dedup (user, day), first-day agg, and the final cell
     agg — three keyed exchanges, none of them the raw event log twice."""
-    from bench import net_shuffles
+    from tools.plan_report import net_shuffles
     from mapreduce_code_spark.operators import monitoring as MON
     from mapreduce_code_spark.sources.io import load_table
 
@@ -1170,8 +1170,7 @@ def test_epoch_manifest_registration_cache_and_parity(spark, sf_dir):
     """The epoch-flip registration (pipeline_materialize_epoch, which
     rewrites the epoch's bytes and audits them): the
     materialized-shards source is built once per sf_dir and validated
-    on hit (the _INGEST_SPLITS pattern — a cleaned dir is rebuilt, not
-    trusted), the flip salt genuinely differs from the written epoch's,
+    on hit (a cleaned dir is rebuilt, not trusted), the flip salt genuinely differs from the written epoch's,
     and the registered row — which physically rewrites the epoch and
     audits the written layout — matches the oracle that recomputes the
     manifest from the RAW documents at EPOCH_SALT, pinning placement,
@@ -1180,13 +1179,15 @@ def test_epoch_manifest_registration_cache_and_parity(spark, sf_dir):
     import glob
     import shutil
 
+    from mapreduce_code_spark import cache
     from mapreduce_code_spark import registry as REG
     from mapreduce_code_spark.plans import pipeline as PIPE
 
     from tests.helpers import assert_parity
 
     assert REG.EPOCH_SALT != PIPE.TRAIN_SALT
-    REG._EPOCH_SHARDS.pop(sf_dir, None)
+    cache.evict("epoch_shards")
+    assert ("epoch_shards", sf_dir) not in cache._DIRS
     src = REG._epoch_shards_src(spark, sf_dir)
     assert REG._epoch_shards_src(spark, sf_dir) == src  # hit, no rebuild
     assert len(glob.glob(f"{src}/shard=*")) == PIPE.TRAIN_SHARDS
@@ -1241,20 +1242,21 @@ def test_ingest_manifest_equals_batch_manifest(spark, sf_dir, tmp_path):
 
 def test_ingest_split_cache_and_contents(spark, sf_dir):
     """The process-cached stream source shared by the two streamed
-    ingest rows (ADVICE r7, low; 3-file since r8 so compact_every=1
-    genuinely folds): one build per (sf_dir, n_files) with validated
-    hits, ascending-doc_id slices whose union is exactly the corpus,
-    strictly increasing mtimes anchored at now (no future-stamped
-    files — round-7 advisor item) so the file source replays them in
-    order, and no scratch dirs left inside the source listing."""
+    ingest rows (3 files, so compact_every=1 genuinely folds): one build
+    per sf_dir with validated hits, ascending-doc_id slices whose union
+    is exactly the corpus, strictly increasing mtimes anchored at now
+    (no future-stamped files) so the file source replays them in order,
+    and no scratch dirs left inside the source listing."""
     import glob
     import os
     import time
 
+    from mapreduce_code_spark import cache
     from mapreduce_code_spark import registry as REG
     from mapreduce_code_spark.sources.io import load_table
 
-    REG._INGEST_SPLITS.pop((sf_dir, 3), None)
+    cache.evict("ingest_split")
+    assert ("ingest_split", sf_dir) not in cache._DIRS
     src = REG._ingest_split_src(spark, sf_dir)
     assert REG._ingest_split_src(spark, sf_dir) == src  # hit, no rebuild
     files = sorted(glob.glob(f"{src}/f*.parquet"))
@@ -1560,36 +1562,36 @@ def test_training_manifest_is_the_written_contract(spark, sf_dir, tmp_path):
 
 
 def test_ingest_run_is_shared_and_evictable(spark, sf_dir):
-    """The two ingest rows share ONE completed streamed run per corpus
-    (r9 verdict #3): the first registered query materializes it, the
-    second reuses the same staging dir (no second writeStream), and
-    evict_cached('ingest_run') — bench.py's owner hook — deletes the
+    """The two ingest rows share ONE completed streamed run per corpus:
+    the first registered query materializes it, the second reuses the
+    same staging dir (no second writeStream), and
+    cache.evict('ingest_run') — a benchmark's owner hook — deletes the
     run so the owner's next timed call pays the cold streamed path."""
     import os
 
-    from mapreduce_code_spark import registry
+    from mapreduce_code_spark import cache, registry
 
-    registry.evict_cached("ingest_run")
-    assert sf_dir not in registry._INGEST_RUNS
+    key = ("ingest_run", sf_dir)
+    cache.evict("ingest_run")
+    assert key not in cache._DIRS
     first = registry.queries()["pipeline_ingest_manifest"](spark, sf_dir)
     assert first.count() > 0
-    base, staging = registry._INGEST_RUNS[sf_dir]
+    base, staging = cache._DIRS[key]
     ledger = registry.queries()["pipeline_ingest_hash_log"](spark, sf_dir)
     assert ledger.count() > 0
     # same run dir — the second query did NOT rebuild
-    assert registry._INGEST_RUNS[sf_dir] == (base, staging)
-    registry.evict_cached("ingest_run")
-    assert sf_dir not in registry._INGEST_RUNS
+    assert cache._DIRS[key] == (base, staging)
+    cache.evict("ingest_run")
+    assert key not in cache._DIRS
     assert not os.path.exists(base)
 
 
 def test_evict_cached_is_scoped_to_the_calling_session(spark, sf_dir):
-    """evict_cached(kind, spark) must leave a concurrently-live OTHER
-    session's cache untouched (r9 advisor item: _cached_df deliberately
-    never degrades a live second session; the eviction hook has to
-    honor the same policy), while evict_cached(kind) keeps the old
-    evict-all behavior."""
-    from mapreduce_code_spark import registry
+    """cache.evict(kind, spark) must leave a concurrently-live OTHER
+    session's shared frame untouched (cache.shared never degrades a
+    live second session; the eviction hook honors the same policy),
+    while cache.evict(kind) drops every session's."""
+    from mapreduce_code_spark import cache
 
     class _OtherSessionFrame:
         sparkSession = object()  # not `spark`, and can't be probed
@@ -1600,11 +1602,11 @@ def test_evict_cached_is_scoped_to_the_calling_session(spark, sf_dir):
 
     other = _OtherSessionFrame()
     key = ("transactions", 12345, "/nonexistent/sf")
-    registry._DF_CACHE[key] = other
+    cache._FRAMES[key] = other
     try:
-        registry.evict_cached("transactions", spark)
-        assert key in registry._DF_CACHE and not other.unpersisted
-        registry.evict_cached("transactions")
-        assert key not in registry._DF_CACHE and other.unpersisted
+        cache.evict("transactions", spark)
+        assert key in cache._FRAMES and not other.unpersisted
+        cache.evict("transactions")
+        assert key not in cache._FRAMES and other.unpersisted
     finally:
-        registry._DF_CACHE.pop(key, None)
+        cache._FRAMES.pop(key, None)

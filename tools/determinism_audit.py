@@ -40,18 +40,7 @@ import pandas as pd
 import __spark_entry__ as contract
 from pyspark.sql import SparkSession
 from mapreduce_code_spark import registry
-from mapreduce_code_spark.operators.dedup import release_persisted
 from tests.helpers import normalize_exact as normalize
-
-
-def _evict_everything(spark) -> None:
-    """Drop every shared cache between the two runs — a persisted
-    shared build would otherwise hand run 2 the cached blocks of
-    exactly the stage whose run-to-run determinism is being checked
-    (review finding: the audit was vacuous for shared-build owners)."""
-    for kind in registry.SHARED_BUILDS:
-        registry.evict_cached(kind, spark)
-    release_persisted()
 
 
 def _head_sha() -> str | None:
@@ -128,11 +117,14 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            _evict_everything(spark)
+            # every shared build is evicted between the runs: a live one
+            # would hand run 2 the cached blocks of exactly the stage
+            # whose run-to-run determinism is being checked
+            registry.evict_all(spark)
             first = normalize(fn(spark, sf_dir).toPandas())
-            _evict_everything(spark)
+            registry.evict_all(spark)
             second = normalize(fn(spark, sf_dir).toPandas())
-            _evict_everything(spark)
+            registry.evict_all(spark)
         except Exception as exc:
             print(f"  {name}: ERROR {type(exc).__name__}: {str(exc)[:160]}")
             failures.append(name)
@@ -140,7 +132,7 @@ def main() -> int:
                 "status": "ERROR",
                 "detail": f"{type(exc).__name__}: {str(exc)[:160]}",
             }
-            _evict_everything(spark)
+            registry.evict_all(spark)
             continue
         try:
             pd.testing.assert_frame_equal(first, second, check_exact=True)

@@ -19,7 +19,6 @@ import duckdb
 
 import __spark_entry__ as contract
 from pyspark.sql import SparkSession
-from mapreduce_code_spark.operators.dedup import release_persisted
 from mapreduce_code_spark.operators.sgd_theta_pinned import (
     PINNED_SF_QUERIES,
     assert_pinned_sf,
@@ -78,15 +77,11 @@ def main() -> int:
             sdf = fn(spark, sf_dir)
             if name not in oracles:
                 print(f"  {name}: rows-only check, rows={sdf.count()}")
-                release_persisted()
                 continue
             got = normalize(sdf.toPandas())
         except Exception as exc:
             print(f"  {name}: ERROR {type(exc).__name__}: {str(exc)[:200]}")
             failures.append(name)
-            # a query that persisted shingle intermediates and THEN raised
-            # must not leave them cached for the rest of the sweep
-            release_persisted()
             continue
         con = duckdb.connect()
         for t in SCHEMAS:
@@ -95,7 +90,6 @@ def main() -> int:
         con.close()
         status = frames_match(got, want)
         print(f"  {name}: rows={len(got)} {status}")
-        release_persisted()  # don't accumulate cached shingle passes
         if status != "OK":
             failures.append(name)
     if failures:

@@ -49,7 +49,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 import __spark_entry__ as contract
 from pyspark.sql import SparkSession
 from mapreduce_code_spark import registry
-from mapreduce_code_spark.operators.dedup import release_persisted
 from driver_check import frames_match, normalize
 
 ENVELOPE_QUERIES = {"regression_sgd_linear", "regression_sgd_logistic"}
@@ -72,12 +71,6 @@ def vacuous_status(name: str) -> tuple[str, bool]:
     if name in EMPTY_OK_QUERIES:
         return "VACUOUS_ALLOWED", False
     return "VACUOUS", True
-
-
-def _evict_everything(spark) -> None:
-    for kind in registry.SHARED_BUILDS:
-        registry.evict_cached(kind, spark)
-    release_persisted()
 
 
 def _artifact_path() -> Path:
@@ -122,10 +115,10 @@ def main() -> int:
             continue
         try:
             spark.conf.set("spark.sql.shuffle.partitions", base_n)
-            _evict_everything(spark)
+            registry.evict_all(spark)
             at_base = normalize(fn(spark, sf_dir).toPandas())
             spark.conf.set("spark.sql.shuffle.partitions", alt_n)
-            _evict_everything(spark)
+            registry.evict_all(spark)
             at_alt = normalize(fn(spark, sf_dir).toPandas())
         except Exception as exc:
             print(f"  {name}: ERROR {type(exc).__name__}: {str(exc)[:160]}")
@@ -137,7 +130,7 @@ def main() -> int:
             continue
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", base_n)
-            _evict_everything(spark)
+            registry.evict_all(spark)
         status = frames_match(at_base, at_alt)
         if status == "OK" and len(at_base) == 0:
             # Two empty frames match trivially — that is not evidence of

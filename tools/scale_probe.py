@@ -288,12 +288,8 @@ def main() -> int:
     # prewarmed cache at both scales. Queries listed in `names` should
     # order owners before their consumers (bench's registry order does
     # this implicitly; here the caller controls the list).
-    from mapreduce_code_spark.operators.dedup import release_persisted
-    from mapreduce_code_spark.registry import (
-        SHARED_BUILDS,
-        SOURCE_FIXTURES,
-        evict_cached,
-    )
+    from mapreduce_code_spark import cache
+    from mapreduce_code_spark.registry import SHARED_BUILDS, SOURCE_FIXTURES
 
     sel = set(names)
     cache_owner = {
@@ -320,14 +316,12 @@ def main() -> int:
             best = None
             for _ in range(repeats):
                 if name in cache_owner:
-                    evict_cached(cache_owner[name], spark)
-                    release_persisted()
+                    cache.evict(cache_owner[name], spark)
                 t0 = time.monotonic()
                 df = qs[name](spark, d)
                 n = df.count()
                 dt = time.monotonic() - t0
                 best = dt if best is None else min(best, dt)
-                release_persisted()
             times[label] = round(best, 3)
             times[f"rows_{label}"] = n
         times["ratio"] = round(times[f"{copies}x"] / times["1x"], 2)
